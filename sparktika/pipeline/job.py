@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
 from . import io as tio
-from .extract import extract_pages_with_oversize_shortcircuit
+from .extract import extract_pages
 from .metrics import partition_metrics, status_summary
 from .resume import newest_per_url, pending_pages
 
@@ -53,8 +53,7 @@ def run_extraction_job(
     else:
         resumed = False  # first run: no committed output yet
 
-    extracted = extract_pages_with_oversize_shortcircuit(
-        pages, cfg, num_partitions=num_partitions)
+    extracted = extract_pages(pages, cfg, num_partitions=num_partitions)
     # The resume anti-join reads output_location while we append to it: a
     # read-your-own-writes hazard on the parquet fallback (Spark refreshes
     # the path cache after the write, so any recompute would see the new

@@ -22,6 +22,23 @@ def test_routing_mhtml_vs_eml():
     assert not is_multipart_related(plain_mail)
 
 
+def test_mixed_case_multipart_header_routes_to_mhtml():
+    # RFC 2045: type and subtype are case-insensitive
+    raw = (b"From: a@example.com\r\nMIME-Version: 1.0\r\n"
+           b"Content-Type: Multipart/Related; boundary=\"B\"\r\n\r\n"
+           b"--B\r\nContent-Type: text/html\r\n\r\n"
+           b"<html><body><p>mixed case</p></body></html>\r\n--B--\r\n")
+    assert is_multipart_related(raw)
+    assert detect_mime(raw) == "multipart/related"
+    r = extract_document("u.mht", None, raw)
+    assert r.status == "ok"
+    assert r.text_extracted == "mixed case"
+    # the prefilter reads only the header block: the token in a body
+    # does not make a plain email a saved page
+    plain = raw.replace(b"Multipart/Related", b"text/plain")
+    assert not is_multipart_related(plain + b"\r\nmultipart/related\r\n")
+
+
 def test_root_html_renders_and_resources_counted():
     r = extract_mhtml(build_mhtml(2))
     assert r.text == "Saved page 2 body.\nTokens 2."

@@ -17,6 +17,12 @@ from sparktika.kernels.extract import extract_document
 from sparktika.kernels.ole2 import Ole2File
 from sparktika.kernels.ooxml import extract_docx, extract_pptx, extract_xlsx
 from sparktika.kernels.xls import extract_xls
+from test_reference_fixtures import FIXTURES
+
+XLS_SAMPLE = FIXTURES / "xls-sample.xls"
+needs_xls_sample = pytest.mark.skipif(
+    not XLS_SAMPLE.exists(),
+    reason=f"reference fixture {XLS_SAMPLE.name} not available")
 
 
 def _zip_bytes(entries: dict[str, bytes]) -> bytes:
@@ -165,8 +171,9 @@ def test_ole2_rejects_junk():
         Ole2File(b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"junk" * 200)
 
 
+@needs_xls_sample
 def test_xls_reference_fixture_cells():
-    data = open("/root/reference/tika-fork-client/test-files/xls-sample.xls", "rb").read()
+    data = XLS_SAMPLE.read_bytes()
     r = extract_xls(data)
     assert r.sheet_names == ["Sheet1", "Sheet2", "Sheet3"]
     assert r.n_cells > 200
@@ -192,8 +199,9 @@ def test_xlsx_self_closing_empty_cells_keep_columns():
     assert "a\t\tc" in r.text
 
 
+@needs_xls_sample
 def test_truncated_ole2_raises_kernel_error_not_struct_error():
-    data = open("/root/reference/tika-fork-client/test-files/xls-sample.xls", "rb").read()
+    data = XLS_SAMPLE.read_bytes()
     with pytest.raises(KernelError):
         Ole2File(data[:1000])  # truncated mid-FAT
 
@@ -368,6 +376,7 @@ def test_doc_negative_prc_cb_cannot_stall_clx_walk():
     assert r.status == "failed"
 
 
+@needs_xls_sample
 def test_office_kernels_honor_expired_deadline():
     """The per-doc cooperative deadline must reach the office/container
     kernels' scan loops (not just html/pdf)."""
@@ -377,8 +386,7 @@ def test_office_kernels_honor_expired_deadline():
 
     past = 0.0  # any monotonic() is > 0
 
-    xls = open("/root/reference/tika-fork-client/test-files/xls-sample.xls",
-               "rb").read()
+    xls = XLS_SAMPLE.read_bytes()
     with pytest.raises(DeadlineError):
         extract_xls(xls, deadline=past)
 

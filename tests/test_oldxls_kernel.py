@@ -22,6 +22,12 @@ from sparktika.kernels.oldxls import (
     is_old_biff,
 )
 from sparktika.synth import _ole2_file, build_oldxls
+from test_reference_fixtures import FIXTURES
+
+XLS_SAMPLE = FIXTURES / "xls-sample.xls"
+needs_xls_sample = pytest.mark.skipif(
+    not XLS_SAMPLE.exists(),
+    reason=f"reference fixture {XLS_SAMPLE.name} not available")
 
 
 def rec(op: int, body: bytes) -> bytes:
@@ -112,11 +118,10 @@ def test_raw_biff_mime_gated_by_validator():
     assert detect_mime(junk, None, "a.xls") != "application/vnd.ms-excel"
 
 
+@needs_xls_sample
 def test_biff8_still_routes_to_the_new_kernel_path():
     # regression: the BOF-version probe must not reroute BIFF8 books
-    data = open(
-        "/root/reference/tika-fork-client/test-files/xls-sample.xls",
-        "rb").read()
+    data = XLS_SAMPLE.read_bytes()
     r = extract_document("n.xls", None, data)
     assert r.status == "ok"
     assert "biff-version" not in r.metadata

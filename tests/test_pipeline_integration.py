@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 
 from sparktika.config import ExtractConfig
 from sparktika.pipeline import dedup, metrics, resume, similarity
-from sparktika.pipeline.extract import (
-    extract_pages,
-    extract_pages_with_oversize_shortcircuit,
-)
+from sparktika.pipeline.extract import extract_pages
 from sparktika.synth import SYNTH_CONFIG, synth_pages
 
 SF_DIR = "/root/testdata/sf0.001"
