@@ -66,10 +66,6 @@ _NID_MESSAGE = 0x04
 _NID_ATTACHMENT = 0x08
 
 
-def is_pst(data: bytes) -> bool:
-    return data[:4] == _MAGIC
-
-
 # --------------------------------------------------------------------------
 # [MS-PST] §5.1 permutative encoding (NDB_CRYPT_PERMUTE, Outlook's default
 # for real PSTs). The cipher is a fixed byte-substitution over leaf data
@@ -102,13 +98,6 @@ def set_permute_table(table: bytes | None) -> None:
     for i, b in enumerate(table):
         inv[b] = i
     MPBB_R, _MPBB_I = bytes(table), bytes(inv)
-
-
-@dataclass
-class PstAttachment:
-    filename: str | None
-    n_bytes: int
-    text: str | None
 
 
 @dataclass

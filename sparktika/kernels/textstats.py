@@ -44,13 +44,6 @@ def word_shingles(text: str, k: int = 3) -> set[bytes]:
     return {(" ".join(ws[i : i + k])).encode() for i in range(len(ws) - k + 1)}
 
 
-def char_ngrams(text: str, n: int = 5) -> set[bytes]:
-    t = text.lower()
-    if len(t) < n:
-        return {t.encode()} if t else set()
-    return {t[i : i + n].encode() for i in range(len(t) - n + 1)}
-
-
 def _minhash_params(num_perm: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.RandomState(seed)
     # odd multipliers -> multiply-shift universal family over 2^64

@@ -45,13 +45,6 @@ def normalize_text_col(c) -> "F.Column":
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
-def normalized_dedup(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
-    return exact_dedup(
-        df.withColumn("__norm", normalize_text_col(F.col(text_col))),
-        "__norm", key_col,
-    ).drop("__norm")
-
-
 # ---------------------------------------------------------------- minhash LSH
 
 def minhash_signatures(

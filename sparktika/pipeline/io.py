@@ -10,8 +10,6 @@ back to parquet dirs with the same call shape; the resume contract
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 _ICEBERG_PROBE: bool | None = None  # per-process cache (one JVM here)
@@ -57,13 +55,6 @@ def append_table(df: DataFrame, location: str) -> None:
     df.write.mode("append").parquet(location)
 
 
-def overwrite_table(df: DataFrame, location: str) -> None:
-    if is_iceberg_location(df.sparkSession, location):
-        df.writeTo(location).createOrReplace()
-        return
-    df.write.mode("overwrite").parquet(location)
-
-
 def table_exists(spark: SparkSession, location: str) -> bool:
     """True iff the table/path exists WITH COMMITTED DATA. Used by resume
     detection: ONLY a definite does-not-exist counts as 'first run'; any
@@ -88,20 +79,24 @@ def table_exists(spark: SparkSession, location: str) -> bool:
         return False
     for st in fs.listStatus(path):
         name = st.getPath().getName()
-        # a non-hidden DIRECTORY also counts as committed data (r9,
-        # ADVICE): partitionBy layouts with _SUCCESS markers disabled
-        # (common on object stores) hold only partition dirs at the top
-        # level — reading that as 'first run' would silently disable the
-        # resume anti-join and duplicate committed rows. _temporary is
-        # excluded by the underscore filter.
-        if name == "_SUCCESS" or (not name.startswith(("_", "."))
-                                  and (st.isDirectory() or st.getLen() > 0)):
+        if name == "_SUCCESS":
+            return True
+        if name.startswith(("_", ".")):
+            continue  # _temporary, .crc and other hidden entries
+        if st.isDirectory():
+            # a `k=v` partition directory also counts as committed data
+            # (r9, ADVICE): partitionBy layouts with _SUCCESS markers
+            # disabled (common on object stores) hold only partition
+            # dirs at the top level — reading that as 'first run' would
+            # silently disable the resume anti-join and duplicate
+            # committed rows. Any other directory (an empty or unrelated
+            # `foo/`) is not data: resume would fail inferring a schema.
+            key, _, value = name.partition("=")
+            if key and value:
+                return True
+        elif st.getLen() > 0:
             return True
     return False
-
-
-def default_output_dir() -> str:
-    return os.environ.get("SPARKTIKA_OUT", "/tmp/sparktika_out")
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,

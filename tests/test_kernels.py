@@ -581,6 +581,20 @@ def test_json_extraction_string_leaves():
     assert (empty.status, empty.text_extracted) == ("ok", "")
 
 
+def test_declared_json_never_overrides_an_exact_route():
+    """The declared-JSON rule is a fallback for text/* types with no
+    route of their own: a payload that sniffs as HTML or vCard keeps
+    its route when the server declares application/json."""
+    from sparktika.kernels.extract import extract_document
+
+    html = b"<html><head><title>T</title></head><body><p>hi</p></body></html>"
+    r = extract_document("https://x/p", "application/json", html)
+    assert (r.content_type_detected, r.status, r.title) == ("text/html", "ok", "T")
+    vcf = b"BEGIN:VCARD\r\nVERSION:3.0\r\nFN:A B\r\nEND:VCARD\r\n"
+    r = extract_document("https://x/c", "application/json", vcf)
+    assert (r.content_type_detected, r.status, r.title) == ("text/vcard", "ok", "A B")
+
+
 def test_pdf_embedded_files_recursed():
     from sparktika.config import ExtractConfig
     from sparktika.synth import build_pdf_embedded

@@ -1092,6 +1092,11 @@ def test_table_exists_requires_committed_data(spark, tmp_path):
      .write.partitionBy("p").parquet(p2))
     os.remove(os.path.join(p2, "_SUCCESS"))
     assert tio.table_exists(spark, p2)
+    # a non-partition directory is not committed data: resume would
+    # fail inferring a schema from it
+    p4 = str(tmp_path / "stray_dir_out")
+    os.makedirs(os.path.join(p4, "foo"))
+    assert not tio.table_exists(spark, p4)
     # while a dir holding only _temporary still reads as crashed/first-run
     p3 = str(tmp_path / "crashed_only_tmp")
     os.makedirs(os.path.join(p3, "_temporary"))
