@@ -9,8 +9,9 @@ pipeline needs (dedup, resume anti-join, per-partition metrics).
 
 Layout:
   kernels/   pure-Python, Spark-free document kernels (unit-testable)
-  pipeline/  Spark wiring: mapInPandas extraction stage, dedup,
-             similarity search, text stats, metrics, resume, IO
+  pipeline/  Spark wiring: mapInArrow map stages (one row-map boundary,
+             arrowmap.py), dedup, similarity search, text stats,
+             metrics, resume, IO
   synth.py   deterministic synthetic `pages` corpus (no external data)
 """
 

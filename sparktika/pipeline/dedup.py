@@ -82,6 +82,13 @@ def minhash_lsh_pairs(
     est_jaccard >= threshold. The band self-join shuffles only
     (band_id, band_hash, key); signatures join back by key afterwards —
     at cluster scale both joins hash-partition on small fixed-width keys.
+
+    Side effect: calling this runs a Spark job. The signature table
+    is eagerly `localCheckpoint`ed at construction, before any action
+    on the result (even `explain()` comes after it). Its blocks stay in
+    the executors' BlockManagers until the driver garbage-collects the
+    result, and losing an executor that holds them fails the job
+    instead of recomputing them (the checkpoint truncates lineage).
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
@@ -199,7 +206,14 @@ def simhash_near_pairs(
     equi-join on (bucket, row_number), linear in bucket size. A true
     near-dup pair has 4 chunks = 4 chances to meet in a cold bucket, so
     recall loss is confined to pairs ONLY co-bucketed in hot chunks;
-    `simhash_bucket_stats` exposes the capped buckets for logging."""
+    `simhash_bucket_stats` exposes the capped buckets for logging.
+
+    Side effect: calling this runs a Spark job. The simhash table
+    is eagerly `localCheckpoint`ed at construction, before any action
+    on the result (even `explain()` comes after it). Its blocks stay in
+    the executors' BlockManagers until the driver garbage-collects the
+    result, and losing an executor that holds them fails the job
+    instead of recomputing them (the checkpoint truncates lineage)."""
     # r9: sh is referenced by the size aggregation plus both sides of the
     # cold and hot candidate joins — without a checkpoint Catalyst
     # re-evaluates the simhash UDF (a full text pass) for every
@@ -277,7 +291,15 @@ def token_jaccard_pairs(
     bounds the join fan-out at max_df^2 per token. High-df tokens carry
     near-zero Jaccard signal, so the cut sharpens rather than degrades the
     measure. For open-ended corpora prefer minhash_lsh_pairs for candidate
-    generation and reserve this as the verify stage."""
+    generation and reserve this as the verify stage.
+
+    Side effect: calling this runs a Spark job. The surviving (key,
+    token) table is eagerly `localCheckpoint`ed at construction, before
+    any action on the result (even `explain()` comes after it). Its
+    blocks stay in the executors' BlockManagers until the driver
+    garbage-collects the result, and losing an executor that holds them
+    fails the job instead of recomputing them (the checkpoint truncates
+    lineage)."""
     toks = df.select(
         F.col(key_col).alias("key"),
         F.explode(F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))).alias("tok"),
@@ -524,7 +546,12 @@ def repeated_ngram_span_ranges(
     into maximal intervals with the islands pattern (running-max window
     over i, one Exchange per doc key). Token indices, not char offsets —
     reconstruction is split+slice on the same whitespace-collapsed
-    tokenization (_doc_shingles lockstep)."""
+    tokenization (_doc_shingles lockstep).
+
+    Precondition: `df` holds one row per `key_col` value. Nothing
+    deduplicates the matched (key, i) positions, so a key that appears
+    on two rows yields each of its spans twice, or overlapping spans if
+    the two rows' texts differ."""
     # same flat post-Generate hashing shape as _doc_shingles (12x over
     # the inline transform-lambda evaluation — see its r9 docstring),
     # with the 1-based window position kept alongside the hash

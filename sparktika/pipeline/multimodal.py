@@ -2,10 +2,12 @@
 
 Image/audio/video payloads travel as `binary` columns with a typed
 metadata struct; decode / feature-extraction / resize / frame-sample run
-as Arrow-batched kernels over mapInPandas. `decode_image` is REAL for
-PNG, BMP, GIF and baseline JPEG (pure-Python kernels/image.py: zlib IDAT
-inflate behind the bomb-ratio guard, scanline unfiltering, LZW, Huffman
-entropy decode + IDCT) and returns (width, height, 8 feature floats).
+as per-row kernels over mapInArrow (`arrowmap.row_batches`; each row
+function catches its own failures and emits a status='failed' row).
+`decode_image` is REAL for PNG, BMP, GIF and baseline JPEG (pure-Python
+kernels/image.py: zlib IDAT inflate behind the bomb-ratio guard,
+scanline unfiltering, LZW, Huffman entropy decode + IDCT) and returns
+(width, height, 8 feature floats).
 Progressive (SOF2) JPEG is fully decoded too (kernels/image.py spectral
 selection + successive approximation); only arithmetic-coded JPEG
 degrades to a status='failed' row. `use_fake=True` keeps the
@@ -15,11 +17,11 @@ deterministic hash-based twin for plumbing tests.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from .arrowmap import row_batches
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -57,25 +59,14 @@ def decode_image(payload: bytes, use_fake: bool = False) -> tuple[int, int, list
     return img.width, img.height, image_features(img)
 
 
-def make_feature_fn(use_fake: bool = False, n_features: int = 8):
-    def feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload, mtype in zip(pdf["media_id"], pdf["payload"], pdf["media_type"]):
-                payload = payload or b""
-                try:
-                    w, h, feats = decode_image(payload, use_fake=use_fake)
-                    rows.append(dict(media_id=mid, media_type=mtype, width=w,
-                                     height=h, n_bytes=len(payload),
-                                     features=feats, status="ok", error=None))
-                except Exception as e:  # poisoned payloads degrade to rows
-                    rows.append(dict(media_id=mid, media_type=mtype, width=None,
-                                     height=None, n_bytes=len(payload),
-                                     features=None, status="failed",
-                                     error=f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows)
-
-    return feature_batches
+def _map_rows(df: DataFrame, cols: list[str], fn, schema: T.StructType,
+              num_partitions: int | None) -> DataFrame:
+    """Select `cols`, optionally salt-repartition on the hash of the first
+    (the row key), and run the row function `fn` over every row."""
+    slim = df.select(*cols)
+    if num_partitions:
+        slim = slim.repartition(num_partitions, F.xxhash64(cols[0]))
+    return slim.mapInArrow(row_batches(fn, schema), schema)
 
 
 def extract_media_features(df: DataFrame, use_fake: bool = False,
@@ -83,10 +74,20 @@ def extract_media_features(df: DataFrame, use_fake: bool = False,
     """media table -> per-item features. Same physical policy as page
     extraction: salted repartition (payload bytes skew), Arrow batches,
     per-row failure containment."""
-    slim = df.select("media_id", "payload", "media_type")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("media_id"))
-    return slim.mapInPandas(make_feature_fn(use_fake), FEATURES_SCHEMA)
+
+    def feature_row(row: dict) -> list[dict]:
+        payload = row["payload"] or b""
+        base = dict(media_id=row["media_id"], media_type=row["media_type"],
+                    n_bytes=len(payload))
+        try:
+            w, h, feats = decode_image(payload, use_fake=use_fake)
+        except Exception as e:  # poisoned payloads degrade to rows
+            return [dict(base, status="failed",
+                         error=f"{type(e).__name__}: {e}")]
+        return [dict(base, width=w, height=h, features=feats, status="ok")]
+
+    return _map_rows(df, ["media_id", "payload", "media_type"], feature_row,
+                     FEATURES_SCHEMA, num_partitions)
 
 
 IMAGE_STATS_SCHEMA = T.StructType([
@@ -109,33 +110,26 @@ def image_stats(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     decoder matrix incl. baseline JPEG (gray / 4:4:4 / 4:2:0)."""
     from ..kernels.image import decode_any
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats_row(row: dict) -> list[dict]:
         import numpy as np
 
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode_any(payload or b"")
-                    means = img.pixels.astype(np.float64).mean(axis=(0, 1)) / 255.0
-                    rows.append(dict(
-                        media_id=mid, width=img.width, height=img.height,
-                        mean_r=round(float(means[0]), 6),
-                        mean_g=round(float(means[1]), 6),
-                        mean_b=round(float(means[2]), 6),
-                        aspect=round(img.width / img.height, 6),
-                        status="ok", error=None))
-                except Exception as e:
-                    rows.append(dict(media_id=mid, width=None, height=None,
-                                     mean_r=None, mean_g=None, mean_b=None,
-                                     aspect=None, status="failed",
-                                     error=f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows)
+        mid = row["media_id"]
+        try:
+            img = decode_any(row["payload"] or b"")
+            means = img.pixels.astype(np.float64).mean(axis=(0, 1)) / 255.0
+            return [dict(
+                media_id=mid, width=img.width, height=img.height,
+                mean_r=round(float(means[0]), 6),
+                mean_g=round(float(means[1]), 6),
+                mean_b=round(float(means[2]), 6),
+                aspect=round(img.width / img.height, 6),
+                status="ok")]
+        except Exception as e:
+            return [dict(media_id=mid, status="failed",
+                         error=f"{type(e).__name__}: {e}")]
 
-    slim = df.select("media_id", "payload")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("media_id"))
-    return slim.mapInPandas(batches, IMAGE_STATS_SCHEMA)
+    return _map_rows(df, ["media_id", "payload"], stats_row,
+                     IMAGE_STATS_SCHEMA, num_partitions)
 
 
 PDF_IMAGE_SCHEMA = T.StructType([
@@ -160,38 +154,29 @@ def pdf_image_stats(df: DataFrame,
     counted in pdf:image-count by the text route)."""
     from ..kernels.pdf import extract_pdf
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def images_rows(row: dict) -> list[dict]:
         import numpy as np
 
-        for pdf in it:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    r = extract_pdf(payload or b"", include_images=True,
-                                    collect_embedded=False)
-                except Exception:
-                    rows.append(dict(doc_id=did, image_idx=None, width=None,
-                                     height=None, mean_r=None, mean_g=None,
-                                     mean_b=None, status="failed"))
-                    continue
-                for idx, (_num, img) in enumerate(r.images):
-                    means = (img.pixels.astype(np.float64).mean(axis=(0, 1))
-                             / 255.0)
-                    rows.append(dict(
-                        doc_id=did, image_idx=idx,
-                        width=img.width, height=img.height,
-                        mean_r=round(float(means[0]), 6),
-                        mean_g=round(float(means[1]), 6),
-                        mean_b=round(float(means[2]), 6),
-                        status="ok"))
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {f.name: pd.Series(dtype="object")
-                 for f in PDF_IMAGE_SCHEMA.fields})
+        did = row["doc_id"]
+        try:
+            r = extract_pdf(row["payload"] or b"", include_images=True,
+                            collect_embedded=False)
+        except Exception:
+            return [dict(doc_id=did, status="failed")]
+        rows = []
+        for idx, (_num, img) in enumerate(r.images):
+            means = img.pixels.astype(np.float64).mean(axis=(0, 1)) / 255.0
+            rows.append(dict(
+                doc_id=did, image_idx=idx,
+                width=img.width, height=img.height,
+                mean_r=round(float(means[0]), 6),
+                mean_g=round(float(means[1]), 6),
+                mean_b=round(float(means[2]), 6),
+                status="ok"))
+        return rows
 
-    slim = df.select("doc_id", "payload")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("doc_id"))
-    return slim.mapInPandas(batches, PDF_IMAGE_SCHEMA)
+    return _map_rows(df, ["doc_id", "payload"], images_rows, PDF_IMAGE_SCHEMA,
+                     num_partitions)
 
 
 AUDIO_SCHEMA = T.StructType([
@@ -215,26 +200,18 @@ def extract_audio_features(df: DataFrame,
     containment, optional salted repartition."""
     from ..kernels.audio import audio_features, decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = payload or b""
-                base = dict(media_id=mid, n_bytes=len(payload), error=None)
-                try:
-                    feats = audio_features(decode_wav(payload))
-                    rows.append(dict(base, status="ok", **feats))
-                except Exception as e:
-                    rows.append(dict(base, sample_rate=None, n_channels=None,
-                                     duration_ms=None, rms=None, peak=None,
-                                     dc_mean=None, status="failed",
-                                     error=f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows)
+    def audio_row(row: dict) -> list[dict]:
+        payload = row["payload"] or b""
+        base = dict(media_id=row["media_id"], n_bytes=len(payload))
+        try:
+            feats = audio_features(decode_wav(payload))
+            return [dict(base, status="ok", **feats)]
+        except Exception as e:
+            return [dict(base, status="failed",
+                         error=f"{type(e).__name__}: {e}")]
 
-    slim = df.select("media_id", "payload")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("media_id"))
-    return slim.mapInPandas(batches, AUDIO_SCHEMA)
+    return _map_rows(df, ["media_id", "payload"], audio_row, AUDIO_SCHEMA,
+                     num_partitions)
 
 
 VIDEO_SCHEMA = T.StructType([
@@ -263,40 +240,28 @@ def extract_video_meta(df: DataFrame,
     sample_video_frames, real for MJPEG tracks)."""
     from ..kernels.video import parse_mp4
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = payload or b""
-                base = dict(media_id=mid, n_bytes=len(payload), error=None)
-                try:
-                    m = parse_mp4(payload)
-                    rows.append(dict(base, width=m.width, height=m.height,
-                                     duration_ms=m.duration_ms,
-                                     n_tracks=m.n_tracks,
-                                     track_kinds=m.track_kinds,
-                                     brand=m.brand,
-                                     codec=m.codec or None,
-                                     codec_profile=m.codec_profile or None,
-                                     codec_level=m.codec_level or None,
-                                     coded_width=m.coded_width or None,
-                                     coded_height=m.coded_height or None,
-                                     status="ok"))
-                except Exception as e:
-                    rows.append(dict(base, width=None, height=None,
-                                     duration_ms=None, n_tracks=None,
-                                     track_kinds=None, brand=None,
-                                     codec=None, codec_profile=None,
-                                     codec_level=None, coded_width=None,
-                                     coded_height=None,
-                                     status="failed",
-                                     error=f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows)
+    def video_row(row: dict) -> list[dict]:
+        payload = row["payload"] or b""
+        base = dict(media_id=row["media_id"], n_bytes=len(payload))
+        try:
+            m = parse_mp4(payload)
+            return [dict(base, width=m.width, height=m.height,
+                         duration_ms=m.duration_ms,
+                         n_tracks=m.n_tracks,
+                         track_kinds=m.track_kinds,
+                         brand=m.brand,
+                         codec=m.codec or None,
+                         codec_profile=m.codec_profile or None,
+                         codec_level=m.codec_level or None,
+                         coded_width=m.coded_width or None,
+                         coded_height=m.coded_height or None,
+                         status="ok")]
+        except Exception as e:
+            return [dict(base, status="failed",
+                         error=f"{type(e).__name__}: {e}")]
 
-    slim = df.select("media_id", "payload")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("media_id"))
-    return slim.mapInPandas(batches, VIDEO_SCHEMA)
+    return _map_rows(df, ["media_id", "payload"], video_row, VIDEO_SCHEMA,
+                     num_partitions)
 
 
 FRAME_SCHEMA = T.StructType([
@@ -316,30 +281,22 @@ def sample_video_frames(df: DataFrame, every_n: int = 30,
     REAL decode for Motion-JPEG tracks (stsd/stsz/stsc/stco walk + per-
     frame JPEG decode); inter-coded codecs degrade to status='failed'
     rows. Output explodes (frames >= videos), so the op stays a
-    mapInPandas flatMap — no shuffle is introduced."""
+    mapInArrow flat-map — no shuffle is introduced."""
     from ..kernels.video import sample_frames
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    for idx, w, h, mean_r in sample_frames(payload or b"",
-                                                           every_n):
-                        rows.append(dict(media_id=mid, frame_index=idx,
-                                         width=w, height=h, mean_r=mean_r,
-                                         status="ok", error=None))
-                except Exception as e:
-                    rows.append(dict(media_id=mid, frame_index=None,
-                                     width=None, height=None, mean_r=None,
-                                     status="failed",
-                                     error=f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows)
+    def frame_rows(row: dict) -> list[dict]:
+        mid = row["media_id"]
+        try:
+            return [dict(media_id=mid, frame_index=idx, width=w, height=h,
+                         mean_r=mean_r, status="ok")
+                    for idx, w, h, mean_r in sample_frames(
+                        row["payload"] or b"", every_n)]
+        except Exception as e:
+            return [dict(media_id=mid, status="failed",
+                         error=f"{type(e).__name__}: {e}")]
 
-    slim = df.select("media_id", "payload")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("media_id"))
-    return slim.mapInPandas(batches, FRAME_SCHEMA)
+    return _map_rows(df, ["media_id", "payload"], frame_rows, FRAME_SCHEMA,
+                     num_partitions)
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -360,32 +317,24 @@ def resize_media(df: DataFrame, out_w: int, out_h: int,
     stage of a media pipeline, end-to-end real for PNG/BMP/GIF."""
     from ..kernels.image import decode_any, resize_image
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resize_row(row: dict) -> list[dict]:
         import numpy as np
 
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = resize_image(decode_any(payload or b""), out_w, out_h)
-                    means = img.pixels.astype(np.float64).mean(axis=(0, 1)) / 255.0
-                    rows.append(dict(media_id=mid, width=img.width,
-                                     height=img.height,
-                                     mean_r=round(float(means[0]), 6),
-                                     mean_g=round(float(means[1]), 6),
-                                     mean_b=round(float(means[2]), 6),
-                                     status="ok", error=None))
-                except Exception as e:
-                    rows.append(dict(media_id=mid, width=None, height=None,
-                                     mean_r=None, mean_g=None, mean_b=None,
-                                     status="failed",
-                                     error=f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows)
+        mid = row["media_id"]
+        try:
+            img = resize_image(decode_any(row["payload"] or b""), out_w, out_h)
+            means = img.pixels.astype(np.float64).mean(axis=(0, 1)) / 255.0
+            return [dict(media_id=mid, width=img.width, height=img.height,
+                         mean_r=round(float(means[0]), 6),
+                         mean_g=round(float(means[1]), 6),
+                         mean_b=round(float(means[2]), 6),
+                         status="ok")]
+        except Exception as e:
+            return [dict(media_id=mid, status="failed",
+                         error=f"{type(e).__name__}: {e}")]
 
-    slim = df.select("media_id", "payload")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("media_id"))
-    return slim.mapInPandas(batches, RESIZE_SCHEMA)
+    return _map_rows(df, ["media_id", "payload"], resize_row, RESIZE_SCHEMA,
+                     num_partitions)
 
 
 CONTAINER_SCHEMA = T.StructType([
@@ -410,40 +359,28 @@ def extract_container_meta(df: DataFrame,
     extract_video_meta (the MP4 twin)."""
     from ..kernels.video import parse_avi, parse_webm
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload or b"")
-                base = dict(media_id=mid, error=None)
-                try:
-                    if payload[:4] == b"\x1aE\xdf\xa3":
-                        m = parse_webm(payload)
-                        rows.append(dict(
-                            base, container=m.doctype, width=m.width,
-                            height=m.height, duration_ms=m.duration_ms,
-                            video_codec=m.video_codec,
-                            audio_codec=m.audio_codec, fps=None,
-                            n_tracks=m.n_tracks, status="ok"))
-                    else:
-                        a = parse_avi(payload)
-                        rows.append(dict(
-                            base, container="avi", width=a.width,
-                            height=a.height, duration_ms=a.duration_ms,
-                            video_codec=a.video_codec,
-                            audio_codec=("pcm" if a.audio_streams
-                                         else None),
-                            fps=a.fps, n_tracks=a.n_streams,
-                            status="ok"))
-                except Exception as e:
-                    rows.append(dict(
-                        base, container=None, width=None, height=None,
-                        duration_ms=None, video_codec=None,
-                        audio_codec=None, fps=None, n_tracks=None,
-                        status="failed", error=f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows)
+    def container_row(row: dict) -> list[dict]:
+        payload = row["payload"] or b""
+        mid = row["media_id"]
+        try:
+            if payload[:4] == b"\x1aE\xdf\xa3":
+                m = parse_webm(payload)
+                return [dict(
+                    media_id=mid, container=m.doctype, width=m.width,
+                    height=m.height, duration_ms=m.duration_ms,
+                    video_codec=m.video_codec,
+                    audio_codec=m.audio_codec,
+                    n_tracks=m.n_tracks, status="ok")]
+            a = parse_avi(payload)
+            return [dict(
+                media_id=mid, container="avi", width=a.width,
+                height=a.height, duration_ms=a.duration_ms,
+                video_codec=a.video_codec,
+                audio_codec="pcm" if a.audio_streams else None,
+                fps=a.fps, n_tracks=a.n_streams, status="ok")]
+        except Exception as e:
+            return [dict(media_id=mid, status="failed",
+                         error=f"{type(e).__name__}: {e}")]
 
-    slim = df.select("media_id", "payload")
-    if num_partitions:
-        slim = slim.repartition(num_partitions, F.xxhash64("media_id"))
-    return slim.mapInPandas(batches, CONTAINER_SCHEMA)
+    return _map_rows(df, ["media_id", "payload"], container_row,
+                     CONTAINER_SCHEMA, num_partitions)

@@ -5,18 +5,17 @@ canonical pages shape (url, warc_ts, html, text, lang). Physical model:
 `binaryFile` gives one row per archive file, so parallelism = number of
 WARC files — Common Crawl ships ~1GB segments in the tens of thousands
 per crawl, which parallelizes a 1000-executor cluster naturally. The
-per-file record iteration runs inside mapInPandas; a malformed archive
-degrades to zero rows for that file (logged in the `error` of a sentinel
-row) rather than failing the task.
+per-file record iteration runs inside mapInArrow (`warc_records`); a
+malformed archive degrades to zero rows for that file (logged in the
+`error` of a sentinel row) rather than failing the task.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from .arrowmap import row_batches
 
 WARC_PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -28,44 +27,38 @@ WARC_PAGES_SCHEMA = T.StructType([
 ])
 
 
-def make_warc_reader(max_inflate_ratio: float = 200.0):
-    def read_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.warc import parse_warc
+def warc_records(files: DataFrame,
+                 max_inflate_ratio: float = 200.0) -> DataFrame:
+    """binaryFile-shaped (path, content) rows -> one WARC_PAGES_SCHEMA row
+    per response record, plus one (source_file, error) sentinel row for an
+    archive that fails to parse (the records read before the failure
+    stay)."""
+    from ..kernels.warc import parse_warc
 
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in
-                                     ("url", "warc_ts", "html", "content_type",
-                                      "source_file", "error")}
+    def records(row: dict) -> list[dict]:
+        path, out = row["path"], []
+        try:
+            for rec in parse_warc(row["content"],
+                                  max_inflate_ratio=max_inflate_ratio):
+                out.append(dict(url=rec.target_uri, warc_ts=rec.warc_date,
+                                html=rec.body,
+                                content_type=rec.http_content_type,
+                                source_file=path))
+        except Exception as e:  # poisoned archive -> sentinel row
+            out.append(dict(source_file=path,
+                            error=f"{type(e).__name__}: {e}"))
+        return out
 
-            def put(url, ts, html, ct, src, err):
-                rows["url"].append(url)
-                rows["warc_ts"].append(ts)
-                rows["html"].append(html)
-                rows["content_type"].append(ct)
-                rows["source_file"].append(src)
-                rows["error"].append(err)
-
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    for rec in parse_warc(bytes(content),
-                                          max_inflate_ratio=max_inflate_ratio):
-                        put(rec.target_uri, rec.warc_date, rec.body,
-                            rec.http_content_type, path, None)
-                except Exception as e:  # poisoned archive -> sentinel row
-                    put(None, None, None, None, path,
-                        f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(rows)
-
-    return read_batches
+    return files.select("path", "content").mapInArrow(
+        row_batches(records, WARC_PAGES_SCHEMA), WARC_PAGES_SCHEMA)
 
 
 def read_warc_pages(spark: SparkSession, path_glob: str,
                     max_inflate_ratio: float = 200.0) -> DataFrame:
     """WARC files -> pages-shaped DataFrame (plus source_file/error columns;
     select the canonical five to feed extract_pages)."""
-    files = (spark.read.format("binaryFile").load(path_glob)
-             .select("path", "content"))
-    raw = files.mapInPandas(make_warc_reader(max_inflate_ratio), WARC_PAGES_SCHEMA)
+    raw = warc_records(spark.read.format("binaryFile").load(path_glob),
+                       max_inflate_ratio)
     return (
         raw.filter(F.col("error").isNull() & F.col("url").isNotNull())
         .withColumn("warc_ts", F.to_timestamp("warc_ts"))
@@ -80,9 +73,7 @@ def read_warc_errors(spark: SparkSession, path_glob: str,
     parse — read_warc_pages drops them from the pages shape, so a
     production ingest MUST check this side output or whole archives
     vanish silently (r5 review)."""
-    files = (spark.read.format("binaryFile").load(path_glob)
-             .select("path", "content"))
-    raw = files.mapInPandas(make_warc_reader(max_inflate_ratio),
-                            WARC_PAGES_SCHEMA)
+    raw = warc_records(spark.read.format("binaryFile").load(path_glob),
+                       max_inflate_ratio)
     return raw.filter(F.col("error").isNotNull()) \
               .select("source_file", "error")

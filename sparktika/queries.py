@@ -47,6 +47,17 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _payload(builder: Callable[[int], bytes]):
+    """The binary column `builder(doc_id)` over the `doc_id` column."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import BinaryType
+
+    def payload(ids: pd.Series) -> pd.Series:
+        return pd.Series([builder(int(i)) for i in ids])
+
+    return pandas_udf(payload, BinaryType())(F.col("doc_id"))
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -1250,22 +1261,15 @@ FROM documents
 """,
 )
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import extract_media_features
     from .synth import build_bmp, build_gif, build_png
 
     builders = {0: build_png, 1: build_bmp, 2: build_gif}
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([builders[int(i) % 3](int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     media = docs.select(
         F.col("doc_id").alias("media_id"),
-        udf(F.col("doc_id")).alias("payload"),
+        _payload(lambda i: builders[i % 3](i)).alias("payload"),
         F.when(F.col("doc_id") % 3 == 0, F.lit("image/png"))
          .when(F.col("doc_id") % 3 == 1, F.lit("image/bmp"))
          .otherwise(F.lit("image/gif")).alias("media_type"),
@@ -1295,21 +1299,14 @@ FROM documents
 def extract_msg_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MSG kernel end-to-end through the real extraction pipeline (mime
     sniff routes the OLE2 payload, dispatcher routes the MAPI streams)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_msg
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_msg(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://mail.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".msg")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_msg).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1333,27 +1330,19 @@ def extract_json_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON payloads: depth-first string-leaf traversal in document order,
     one line per string value; top-level "title" key surfaces as the
     document title. Numbers/bools are skipped (text-pipeline semantics)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            out.append((f'{{"title": "Json doc {i}", "body": "Body text {i}.",'
-                        f' "tags": ["t{i % 5}", "u{(i + 1) % 5}"], "n": {i}}}'
-                        ).encode())
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        return (f'{{"title": "Json doc {i}", "body": "Body text {i}.",'
+                f' "tags": ["t{i % 5}", "u{(i + 1) % 5}"], "n": {i}}}'
+                ).encode()
 
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://api.example.com/j"),
                  F.col("doc_id").cast("string"), F.lit(".json")).alias("url"),
         F.lit("application/json").alias("content_type"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1379,26 +1368,18 @@ def extract_charset_utf16(spark: SparkSession, sf_dir: str) -> DataFrame:
     the payload through the MIME text sniff (NULs would otherwise defeat
     the printable-ratio check) and the charset kernel decodes LE/BE to
     the exact original text."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            enc = "utf-16-le" if i % 2 == 0 else "utf-16-be"
-            out.append((f"Utf16 sample {i}. The quick brown fox jumps "
-                        "over the lazy dog.").encode(enc))
-        return pd.Series(out)
+    def build(i: int) -> bytes:
+        enc = "utf-16-le" if i % 2 == 0 else "utf-16-be"
+        return (f"Utf16 sample {i}. The quick brown fox jumps "
+                "over the lazy dog.").encode(enc)
 
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://text.example.com/u"),
                  F.col("doc_id").cast("string"), F.lit(".txt")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1427,28 +1408,21 @@ FROM documents
 """,
 )
 def source_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC source end-to-end through the REAL reader (make_warc_reader's
-    mapInPandas over binaryFile-shaped rows): gzip member inflation behind
+    """WARC source end-to-end through the REAL reader (warc_records's
+    mapInArrow over binaryFile-shaped rows): gzip member inflation behind
     the bomb guard, warcinfo/request records skipped, identity AND chunked
     transfer-encoding bodies, HTTP header Content-Type surfaced. ISO 28500
     per kernels/warc.py; parallelism = one row per archive file (Common
     Crawl ships ~1GB segments by the tens of thousands)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    from .pipeline.sources import WARC_PAGES_SCHEMA, make_warc_reader
+    from .pipeline.sources import warc_records
     from .synth import build_warc_gz
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_warc_gz(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     files = docs.select(
         F.concat(F.lit("synth://warc/"), F.col("doc_id").cast("string"),
                  F.lit(".warc.gz")).alias("path"),
-        udf(F.col("doc_id")).alias("content"))
-    pages = files.mapInPandas(make_warc_reader(), WARC_PAGES_SCHEMA)
+        _payload(build_warc_gz).alias("content"))
+    pages = warc_records(files)
     return pages.select(
         F.regexp_extract("url", r"com/(\d+)/", 1).cast("long").alias("doc_id"),
         "url", "warc_ts", "content_type",
@@ -1476,21 +1450,14 @@ def extract_doc_subdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppress field INSTRUCTION text (keep only the cached result between
     separator and end marks — Tika HWPF WordExtractor behavior) and split
     the CP space into main/footnotes/headers via FibRgLw97 ccp counts."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_doc_full
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_doc_full(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/w"),
                  F.col("doc_id").cast("string"), F.lit(".doc")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_doc_full).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1531,21 +1498,14 @@ def extract_msg_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
     across attachments), text attachments decode inline, binary ones stay
     opaque. Parity target: Tika OutlookExtractor's embedded-attachment
     handling (tika-fork delegates via the auto-detect parser)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_msg_attach
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_msg_attach(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://mail.example.com/a"),
                  F.col("doc_id").cast("string"), F.lit(".msg")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_msg_attach).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1576,21 +1536,14 @@ def extract_msg_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedded-message attachments (PidTagAttachDataObject sub-storage):
     the inner message's subject and body render inline, one nesting level
     deep (Tika's embedded-document recursion posture)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_msg_nested
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_msg_nested(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://mail.example.com/n"),
                  F.col("doc_id").cast("string"), F.lit(".msg")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_msg_nested).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1615,21 +1568,14 @@ FROM documents
 def extract_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RTF kernel end-to-end through the extraction pipeline (magic-byte
     mime routing -> control-word scanner -> info/title metadata)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_rtf
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_rtf(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://docs.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".rtf")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_rtf).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1769,21 +1715,14 @@ def extract_lz4_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksums, legacy frames) — no stdlib codec exists. Store-mode
     corpora here (CLI-validated); compressed paths pinned against
     lz4-CLI goldens in tests/test_lz4_kernel.py."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_lz4_txt
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_lz4_txt(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".txt.lz4")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_lz4_txt).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -1948,20 +1887,13 @@ def media_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     timescale/duration, TrackEntry codec/dims/audio shape) and AVI
     (RIFF hdrl walk: avih dims/frames/fps, strh codecs) header
     metadata — completing the video-container family next to the ISO
-    BMFF walker. Map-only mapInPandas, the extract_video_meta twin."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
+    BMFF walker. Map-only mapInArrow, the extract_video_meta twin."""
     from .pipeline.multimodal import extract_container_meta
     from .synth import build_media_container
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_media_container(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     video = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_media_container).alias("payload"))
     return extract_container_meta(video).select(
         "media_id", "container", "width", "height", "duration_ms",
         "video_codec", "audio_codec", "fps", "n_tracks", "status")
@@ -1995,21 +1927,14 @@ def extract_iwork_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     APXL index (plain or .gz). Detection demands BOTH
     buildVersionHistory.plist and an index entry, so generic zips never
     misroute; odd Pages docs carry a gzip index."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_iwork
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_iwork(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".pages")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_iwork).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2111,15 +2036,8 @@ def extract_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     usually gzip-wrapped, which the wrapper chain handles
     transparently). URL rows land in metadata; the protocol's own 50k
     per-file cap bounds memory."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_sitemap
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_sitemap(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://crawl.example.com/"),
@@ -2127,7 +2045,7 @@ def extract_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.when(F.col("doc_id") % 2 == 1,
                         F.lit("/sitemap.xml.gz"))
                   .otherwise(F.lit("/sitemap.xml"))).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_sitemap).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2169,22 +2087,15 @@ def extract_snappy_deflate_text(spark: SparkSession,
     zstd/lz4/lzma/snappy/deflate; brotli has no magic and no lib —
     out of scope). Even docs ride snappy (%3==0 uncompressed chunks,
     rest compressed), odd docs zlib."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_modern_codec_txt
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_modern_codec_txt(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.when(F.col("doc_id") % 2 == 0, F.lit(".txt.sz"))
                   .otherwise(F.lit(".txt.zz"))).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_modern_codec_txt).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -2221,21 +2132,14 @@ def extract_mat_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shapes as the body (1xN char variables also render their
     string), header facts as metadata. miCOMPRESSED elements inflate
     under the shared guard — the synth string variable rides one."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_mat_file
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_mat_file(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".mat")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_mat_file).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2271,21 +2175,14 @@ def extract_midi_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     lyric/text meta events become the body (lyrics arrive sliced per
     note and join without separators), track/format/division facts
     become metadata. Real channel events incl. running status walk."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_midi_song
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_midi_song(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".mid")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_midi_song).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2331,21 +2228,14 @@ def extract_font_psd_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture: header facts only). Weak sfnt magic is validator-gated in
     kernels/mime.py (is_font); TTC collections report the first font
     plus the member count; every 9th doc runs the TTC path."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_design_asset
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_design_asset(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://assets.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".bin")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_design_asset).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2395,21 +2285,14 @@ def extract_dbf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection demands four mutually consistent header facts
     (kernels/mime.py); deleted records skip (the %4==0 docs exercise
     that path); rows render TAB-joined like DBFParser's XHTML table."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_dbf_table
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_dbf_table(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".dbf")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_dbf_table).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2456,21 +2339,14 @@ def extract_feed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the feed title the document title, entry links/dates metadata —
     web crawls are full of these and the XML route previously rendered
     them as undifferentiated element soup."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_feed
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_feed(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://feeds.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit("/feed.xml")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_feed).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2516,21 +2392,14 @@ def extract_executable_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tika-parsers:1.20 jar, reference build.gradle). Metadata-only by
     design — platform facts from the public ABI headers (System V
     gABI, Microsoft PE/COFF spec, mach-o/loader.h), never text."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_executable
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_executable(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".bin")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_executable).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -2575,22 +2444,15 @@ def extract_legacy_codec_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec logic in its own tree). The %3==0 .Z bodies carry a forced
     CLEAR code so the reset + 8-code-group realignment path — the
     subtle part of the format — runs in the driver gate."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_legacy_codec_txt
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_legacy_codec_txt(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.when(F.col("doc_id") % 2 == 0, F.lit(".txt.Z"))
                   .otherwise(F.lit(".txt.lzma"))).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_legacy_codec_txt).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -2885,21 +2747,14 @@ FROM documents
 def extract_eml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 822 email kernel end-to-end (header-block mime sniff routes the
     payload; multipart walk with base64 part decoding)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_eml
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_eml(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://mail.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".eml")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_eml).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -3104,19 +2959,12 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real PCM WAV decode over synthesized square-wave audio: RMS*32768
     recovers the synthesized amplitude exactly (see synth.build_wav), so
     the float feature gets an exact integer oracle."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import extract_audio_features
     from .synth import build_wav
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_wav(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     audio = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_wav).alias("payload"))
     feats = extract_audio_features(audio)
     return feats.select(
         "media_id", "sample_rate", "n_channels", "duration_ms",
@@ -3141,19 +2989,12 @@ def media_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ISO BMFF box-walk metadata over synthesized MP4 containers —
     dims/duration/track structure are pure functions of media_id (see
     synth.build_mp4); frame decode is the media_frame_sample query."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import extract_video_meta
     from .synth import build_mp4
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_mp4(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     video = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_mp4).alias("payload"))
     return extract_video_meta(video).select(
         "media_id", "width", "height", "duration_ms", "n_tracks",
         "brand", "status")
@@ -3175,21 +3016,15 @@ def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thumbnail stage: decode + nearest-neighbor resize to 32x32 + channel
     means. Synth images are solid-color, so the resized means equal the
     synthesized fill color exactly (see synth._media_color)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import resize_media
     from .synth import build_bmp, build_gif, build_png
 
     builders = {0: build_png, 1: build_bmp, 2: build_gif}
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([builders[int(i) % 3](int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     media = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(lambda i: builders[i % 3](i))
+                        .alias("payload"))
     return resize_media(media, 32, 32).select(
         "media_id", "width", "height", "mean_r", "mean_g", "mean_b", "status")
 
@@ -3217,19 +3052,12 @@ def media_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     an all-ones quant table, so the decode is pixel-exact and every mean is
     a SQL-predictable color/255 rational. Variants rotate grayscale /
     YCbCr 4:4:4 / YCbCr 4:2:0 (neutral chroma => R=G=B=gray exactly)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import image_stats
     from .synth import build_jpeg
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_jpeg(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     media = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_jpeg).alias("payload"))
     stats = image_stats(media)
     return stats.select(
         "media_id",
@@ -3371,18 +3199,11 @@ def extract_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity, ref main/TikaForkMain.java:98,307-311): FlateDecode RGB and
     DCTDecode JPEG XObjects decode through the repo's own decoders to
     exact-rational channel means."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import pdf_image_stats
     from .synth import build_pdf_images
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_pdf_images(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
-    pdfs = docs.select("doc_id", udf(F.col("doc_id")).alias("payload"))
+    pdfs = docs.select("doc_id", _payload(build_pdf_images).alias("payload"))
     return pdf_image_stats(pdfs).select(
         "doc_id", "image_idx", "width", "height",
         "mean_r", "mean_g", "mean_b", "status")
@@ -3407,19 +3228,12 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the baseline JPEG kernel. Synth frames are solid gray
     (media_id*37 + f*11) % 256, so sampled means are SQL-predictable
     exact rationals (see synth.build_mjpeg_mp4)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import sample_video_frames
     from .synth import build_mjpeg_mp4
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_mjpeg_mp4(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     media = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_mjpeg_mp4).alias("payload"))
     return sample_video_frames(media, every_n=2).select(
         "media_id", "frame_index", "width", "height", "mean_r", "status")
 
@@ -3443,24 +3257,17 @@ def extract_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ImageParser parity): MIME sniff routes them, header-only dimension
     parsing lands in metadata, status ok with an empty body — no pixel
     decode in the text pipeline."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_bmp, build_gif, build_jpeg, build_png, build_tiff
 
     builders = {0: build_png, 1: build_bmp, 2: build_gif,
                 3: build_jpeg, 4: build_tiff}
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([builders[int(i) % 5](int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://img.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".img")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(lambda i: builders[i % 5](i)).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -3493,21 +3300,14 @@ def extract_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure (IFD0 + ExifIFD) is walked header-only and surfaced under
     Tika's public names (tiff:Make/Model/Orientation,
     exif:DateTimeOriginal) alongside the SOF dimensions."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_jpeg_exif
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_jpeg_exif(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://photos.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".jpg")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_jpeg_exif).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     m = lambda k: F.element_at("metadata", k).getItem(0)
@@ -3542,19 +3342,12 @@ def media_tiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     both byte orders, RGB/palette photometrics. Solid synth fills make
     every channel mean an exact color/255 rational (palette entries are
     value*257, dividing back exactly)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import image_stats
     from .synth import build_tiff
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_tiff(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     media = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_tiff).alias("payload"))
     return image_stats(media).select(
         "media_id",
         F.when(F.col("media_id") % 3 == 0, F.lit("ii-rgb"))
@@ -3579,19 +3372,12 @@ def media_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     successive approximation + EOB-run scans over the same solid payloads
     as media_jpeg_features — the oracle pins that the multi-scan decode is
     pixel-exact too."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import image_stats
     from .synth import build_jpeg_progressive
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_jpeg_progressive(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     media = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_jpeg_progressive).alias("payload"))
     return image_stats(media).select(
         "media_id", "width", "height", "mean_r", "status")
 
@@ -3609,21 +3395,14 @@ FROM documents
 def extract_tar_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ustar container kernel end-to-end (offset-257 magic sniff routes the
     payload; per-entry MIME routing concatenates the text entries)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.extract import extract_pages
     from .synth import build_tar
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_tar(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://archive.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".tar")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_tar).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -3803,24 +3582,16 @@ def extract_embedded_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     text file plus an embedded Word sub-document — all payloads routed
     back through extract_document / tree-scoped office kernels under the
     max_embed_depth budget."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_doc_embedded, build_msg_deep
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([
-            build_msg_deep(int(i)) if int(i) % 2 == 0
-            else build_doc_embedded(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://embed.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.when(F.col("doc_id") % 2 == 0, F.lit(".msg"))
                   .otherwise(F.lit(".doc"))).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(lambda i: build_msg_deep(i) if i % 2 == 0
+                 else build_doc_embedded(i)).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -3864,19 +3635,12 @@ def media_h264_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec libs in the container), matching Tika's metadata-only posture
     for video. Every value is a pure function of media_id
     (synth._h264_params)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import extract_video_meta
     from .synth import build_h264_mp4
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_h264_mp4(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     video = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_h264_mp4).alias("payload"))
     return extract_video_meta(video).select(
         "media_id", "codec", "codec_profile", "codec_level",
         "coded_width", "coded_height", "duration_ms", "status")
@@ -3886,23 +3650,16 @@ def _payload_extract(spark: SparkSession, sf_dir: str, builder_name: str,
                      suffix: str, cfg: ExtractConfig = None) -> DataFrame:
     """pages built from a synth builder over doc_id, through the real
     extraction pipeline (mime sniff -> dispatcher -> kernel)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from . import synth as _synth
 
     builder = getattr(_synth, builder_name)
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([builder(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(suffix)).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(builder).alias("html"),
     )
     ext = extract_pages(pages, cfg if cfg is not None else SYNTH_CONFIG)
     return ext.withColumn(
@@ -4162,19 +3919,12 @@ def media_hevc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conformance window) over synthesized hvc1 MP4s — with
     media_h264_meta this covers both codecs a modern crawl's videos
     actually carry; frame decode stays out of scope (no codec libs)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import extract_video_meta
     from .synth import build_hevc_mp4
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_hevc_mp4(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     video = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_hevc_mp4).alias("payload"))
     return extract_video_meta(video).select(
         "media_id", "codec", "codec_profile", "codec_level",
         "coded_width", "coded_height", "status")
@@ -4236,19 +3986,12 @@ def media_av1_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse: profile/level/max frame dims) over synthesized av01 MP4s —
     completes the codec-metadata triad (H.264/H.265/AV1) a modern
     crawl's videos carry; frame decode stays out of scope."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .pipeline.multimodal import extract_video_meta
     from .synth import build_av1_mp4
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_av1_mp4(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     video = docs.select(F.col("doc_id").alias("media_id"),
-                        udf(F.col("doc_id")).alias("payload"))
+                        _payload(build_av1_mp4).alias("payload"))
     return extract_video_meta(video).select(
         "media_id", "codec", "codec_profile", "codec_level",
         "coded_width", "coded_height", "status")
@@ -4325,24 +4068,16 @@ def extract_compressed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_length decompress + nested-compression refusal) re-dispatching
     the inner payload — completes the gzip route's family; a real crawl
     carries .bz2/.xz sidecar files constantly."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_bz2_txt, build_xz_txt
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([
-            build_bz2_txt(int(i)) if int(i) % 2 == 0 else build_xz_txt(int(i))
-            for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".txt"),
                  F.when(F.col("doc_id") % 2 == 0, F.lit(".bz2"))
                   .otherwise(F.lit(".xz"))).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(lambda i: build_bz2_txt(i) if i % 2 == 0
+                 else build_xz_txt(i)).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -4375,21 +4110,14 @@ def extract_zstd_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic, CLI-validated); odd ids carry a leading skippable
     frame, ids % 3 == 0 force multi-block; the compressed paths are
     pinned against zstd-CLI goldens in tests/test_zstd_kernel.py."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_zstd_txt
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_zstd_txt(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".txt.zst")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_zstd_txt).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     return ext.select(
@@ -4637,24 +4365,14 @@ def media_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries: FLAC STREAMINFO (doc_id%3==0), MP3 frame header + ID3 skip
     (==1), Ogg Vorbis/Opus identification headers (==2) — all values
     pure functions of media_id (synth.build_flac/mp3/ogg)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_flac, build_mp3, build_ogg
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            out.append((build_flac, build_mp3, build_ogg)[i % 3](i))
-        return pd.Series(out)
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://a.example.com/"),
                  F.col("doc_id").cast("string"), F.lit(".audio")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(lambda i: (build_flac, build_mp3, build_ogg)[i % 3](i))
+        .alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     m = lambda k: F.element_at("metadata", k).getItem(0)
@@ -4943,21 +4661,14 @@ def extract_netcdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the body. From-scratch header walk per the public Unidata
     classic-format grammar (kernels/netcdf.py); even docs CDF-1, odd
     CDF-2 (64-bit offsets), record + fixed dims, char + float vars."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_netcdf_file
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_netcdf_file(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://data.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".nc")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_netcdf_file).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -4997,21 +4708,14 @@ def extract_vsd_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tika-parsers:1.20, reference build.gradle:24 — its POI HDGF
     decompressor is the only public description of the codec, so the
     body stays out of scope like the PST permute table)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_vsd
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_vsd(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".vsd")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_vsd).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -5051,21 +4755,14 @@ def extract_ppt95_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     — exact reference parity, since Tika 1.20/POI 4.0.1 throw
     OldPowerPointFormatException for every pre-97 deck rather than
     extracting text. Even docs PP95, odd PP40."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_ppt_old
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_ppt_old(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".ppt")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_ppt_old).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -5105,21 +4802,14 @@ def extract_wpd_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     WordPerfectParser via tika-parsers:1.20, reference
     build.gradle:24), and password-protected files refuse through the
     EncryptedError path with a queryable encryption kind."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_wpd
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_wpd(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".wpd")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_wpd).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")
@@ -5262,19 +4952,12 @@ def extract_mhtml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kernel_pages(spark: SparkSession, sf_dir: str, builder, ext: str):
     """Shared shape for per-format kernel queries: deterministic synth
     payloads keyed by doc_id through the full extract_pages path."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([builder(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://files.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(f".{ext}")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(builder).alias("html"),
     )
     ext_df = extract_pages(pages, SYNTH_CONFIG)
     return ext_df.withColumn(
@@ -6042,21 +5725,14 @@ def extract_hdf5_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     SNOD + local-heap groups; v2/v3 features refuse loudly). Even docs
     carry a subgroup with a string dataset; dataset VALUES are never
     read — header metadata only."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
-
     from .synth import build_hdf5_file
 
-    def payload_fn(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_hdf5_file(int(i)) for i in ids])
-
-    udf = pandas_udf(payload_fn, BinaryType())
     docs = _docs(spark, sf_dir)
     pages = docs.select(
         F.concat(F.lit("https://data.example.com/"),
                  F.col("doc_id").cast("string"),
                  F.lit(".h5")).alias("url"),
-        udf(F.col("doc_id")).alias("html"),
+        _payload(build_hdf5_file).alias("html"),
     )
     ext = extract_pages(pages, SYNTH_CONFIG)
     meta = F.col("metadata")

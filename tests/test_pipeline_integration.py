@@ -78,7 +78,7 @@ def test_resume_pending_shrinks_to_zero(spark, pages):
 
 
 def test_streaming_incremental_extraction(spark, pages):
-    """readStream -> mapInPandas kernel -> parquet sink with availableNow:
+    """readStream -> mapInArrow kernel -> parquet sink with availableNow:
     first run extracts everything; a second run over the same checkpoint
     extracts NOTHING new (exactly-once resume), then new files are picked
     up incrementally."""
@@ -202,7 +202,7 @@ def test_streaming_sessionize_converges_to_batch(spark):
 
 
 def test_multimodal_fake_decode_plumbing(spark):
-    """Binary payload -> mapInPandas feature extraction: deterministic fake
+    """Binary payload -> mapInArrow feature extraction: deterministic fake
     decoder produces stable dimensions; poisoned rows degrade to status."""
     import hashlib
 

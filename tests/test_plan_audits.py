@@ -43,7 +43,7 @@ def test_extract_pages_scan_is_column_pruned(spark, tmp_path):
         schema = line.split("ReadSchema:")[1]
         assert "text" not in schema and "lang" not in schema, line
         assert "url" in schema and "html" in schema, line
-    assert "Exchange" not in plan  # map-only: scan -> project -> mapInPandas
+    assert "Exchange" not in plan  # map-only: scan -> project -> mapInArrow
 
 
 def test_brute_force_topk_broadcasts_queries(spark):
@@ -156,7 +156,7 @@ def test_semantic_dedup_reuses_materialized_assignment(spark):
 
 def test_pdf_image_stats_is_map_only(spark):
     """r4 verdict item 7: PDF image payload decoding must stay a pure
-    map (scan -> project -> mapInPandas), no Exchange."""
+    map (scan -> project -> mapInArrow), no Exchange."""
     from pyspark.sql import functions as F
 
     from sparktika.pipeline.multimodal import pdf_image_stats
@@ -176,6 +176,7 @@ def test_pdf_image_stats_is_map_only(spark):
     pdfs = docs.select("doc_id", payload(F.col("doc_id")).alias("payload"))
     plan = _plan(pdf_image_stats(pdfs))
     assert "Exchange" not in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 def test_contamination_broadcasts_benchmark_side(spark):

@@ -1,5 +1,5 @@
-"""The extraction stage's zip-directory patch
-(`sparktika.pipeline.extract._reread_zips_only_when_changed`).
+"""The map stages' zip-directory patch
+(`sparktika.pipeline.arrowmap._reread_zips_only_when_changed`).
 
 PySpark's worker calls `importlib.invalidate_caches()` before every task;
 below Python 3.13 that re-reads the whole directory of every zip archive
@@ -17,7 +17,7 @@ import zipimport
 import pyarrow as pa
 import pytest
 
-from sparktika.pipeline import extract as ex
+from sparktika.pipeline import arrowmap as am
 
 below_313 = pytest.mark.skipif(
     sys.version_info >= (3, 13),
@@ -66,7 +66,7 @@ def test_unchanged_archive_is_not_reread(zip_on_path, reads):
     importlib.invalidate_caches()
     assert reads.count(zip_on_path) == 1  # CPython: one re-read per call
 
-    ex._reread_zips_only_when_changed()
+    am._reread_zips_only_when_changed()
     importlib.invalidate_caches()  # first call records the stamp
     before = reads.count(zip_on_path)
     for _ in range(3):
@@ -76,7 +76,7 @@ def test_unchanged_archive_is_not_reread(zip_on_path, reads):
 
 @below_313
 def test_rewritten_archive_is_reread(zip_on_path, reads):
-    ex._reread_zips_only_when_changed()
+    am._reread_zips_only_when_changed()
     importlib.invalidate_caches()
     with pytest.raises(ImportError):
         importlib.import_module("zr_mod_b")
@@ -91,7 +91,7 @@ def test_rewritten_archive_is_reread(zip_on_path, reads):
 
 @below_313
 def test_vanished_archive_empties_the_importer(zip_on_path):
-    ex._reread_zips_only_when_changed()
+    am._reread_zips_only_when_changed()
     importlib.invalidate_caches()
     importer = sys.path_importer_cache[zip_on_path]
     assert importer._files
@@ -103,9 +103,9 @@ def test_vanished_archive_empties_the_importer(zip_on_path):
 
 
 def test_patch_is_idempotent(zip_on_path):
-    ex._reread_zips_only_when_changed()
+    am._reread_zips_only_when_changed()
     once = zipimport.zipimporter.invalidate_caches
-    ex._reread_zips_only_when_changed()
+    am._reread_zips_only_when_changed()
     assert zipimport.zipimporter.invalidate_caches is once
 
 
@@ -113,16 +113,21 @@ def test_patch_is_a_noop_from_python_313(zip_on_path, monkeypatch):
     original = zipimport.zipimporter.invalidate_caches
     with monkeypatch.context() as m:
         m.setattr(sys, "version_info", (3, 13, 0, "final", 0))
-        ex._reread_zips_only_when_changed()
+        am._reread_zips_only_when_changed()
     assert zipimport.zipimporter.invalidate_caches is original
 
 
 @below_313
 def test_extraction_worker_runs_the_patched_invalidate_caches():
-    """local[1] reuses one Python worker: a probe task before extraction
-    sees CPython's method, the same worker after extraction sees the
-    replaced one."""
+    """local[1] reuses one Python worker: a probe task before a map stage
+    sees CPython's method, the same worker after it sees the replaced one.
+    Checked for page extraction and for a multimodal stage: the probe
+    after extraction puts CPython's method back, so `image_stats` must
+    patch the worker again."""
+    from sparktika.pipeline.extract import extract_pages
+    from sparktika.pipeline.multimodal import image_stats
     from sparktika.pipeline.session import build_session
+    from sparktika.synth import build_png
 
     spark = build_session(master="local[1]", shuffle_partitions=1)
     spark.sparkContext.setLogLevel("ERROR")
@@ -132,29 +137,41 @@ def test_extraction_worker_runs_the_patched_invalidate_caches():
              ("https://x/b.html", b"<html><title>b</title><p>two</p></html>")],
             "url string, html binary")
 
-        def probe(batches):
+        media = spark.createDataFrame([(7, build_png(7))],
+                                      "media_id long, payload binary")
+
+        def probe(batches, restore=False):
             import os
             import zipimport
 
             for _ in batches:
                 pass
+            method = zipimport.zipimporter.invalidate_caches
             yield pa.RecordBatch.from_pylist([{
                 "pid": os.getpid(),
-                "replaced": hasattr(zipimport.zipimporter.invalidate_caches,
-                                    "reread"),
+                "replaced": hasattr(method, "reread"),
             }])
+            if restore and hasattr(method, "reread"):
+                zipimport.zipimporter.invalidate_caches = method.reread
 
-        def run_probe():
+        def run_probe(restore=False):
             return spark.range(1, numPartitions=1).mapInArrow(
-                probe, "pid long, replaced boolean").collect()[0]
+                lambda it: probe(it, restore),
+                "pid long, replaced boolean").collect()[0]
 
         before = run_probe()
-        statuses = [r.status for r in ex.extract_pages(pages).collect()]
-        after = run_probe()
+        statuses = [r.status for r in extract_pages(pages).collect()]
+        after = run_probe(restore=True)
+        restored = run_probe()
+        media_statuses = [r.status for r in image_stats(media).collect()]
+        after_media = run_probe()
     finally:
         spark.stop()
 
     assert statuses == ["ok", "ok"]
+    assert media_statuses == ["ok"]
     assert not before.replaced
-    assert after.pid == before.pid  # the same reused worker
+    assert before.pid == after.pid == restored.pid == after_media.pid
     assert after.replaced
+    assert not restored.replaced
+    assert after_media.replaced
