@@ -11,7 +11,9 @@ stages differ only in their row bodies:
 - output: every dict `fn(row)` returns, built into one typed
   `pa.RecordBatch` per input batch against the Arrow form of the Spark
   schema. A key the dict omits is null; a batch with no outputs is a
-  0-row batch with the declared schema.
+  0-row batch with the declared schema. Values are not cast: an integer
+  outside its column's range fails the build, so a row function whose
+  integers come from file headers passes its dicts through `fit_ints`.
 
 Why `mapInArrow` and hand-built dicts: the pandas envelope
 (`mapInPandas`) paid an Arrow->pandas object-block conversion on input
@@ -87,11 +89,31 @@ def _reread_zips_only_when_changed() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
+             T.LongType: 64}
+
+
+def fit_ints(out: dict, schema: T.StructType) -> dict:
+    """`out`, after checking each top-level integer value against its
+    column's signed width. File headers carry unsigned 32/64-bit fields,
+    and the Arrow build after the row function fails the whole task on a
+    value that does not fit; called inside the row function's `try`, the
+    ValueError raised here makes it that row's failure instead."""
+    for f in schema.fields:
+        bits = _INT_BITS.get(type(f.dataType))
+        v = out.get(f.name)
+        if bits and v is not None and not (
+                -(1 << bits - 1) <= v < 1 << bits - 1):
+            raise ValueError(f"{f.name}={v} does not fit a {bits}-bit column")
+    return out
+
+
 def row_batches(fn: Callable[[dict], Iterable[dict]], schema: T.StructType):
     """The `mapInArrow` batch function that runs `fn` on every input row
     and builds its outputs into batches of `schema`. `fn(row)` returns an
     iterable of output dicts: one for a map, zero or more for a flat-map.
-    `fn` must catch what a row can raise; an exception fails the task."""
+    `fn` must catch what a row can raise, including an integer that does
+    not fit its column (`fit_ints`); an exception fails the task."""
     arrow_schema = to_arrow_schema(schema)
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

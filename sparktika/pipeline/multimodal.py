@@ -4,6 +4,10 @@ Image/audio/video payloads travel as `binary` columns with a typed
 metadata struct; decode / feature-extraction / resize / frame-sample run
 as per-row kernels over mapInArrow (`arrowmap.row_batches`; each row
 function catches its own failures and emits a status='failed' row).
+The header-metadata ops (audio, MP4, WebM/AVI) check their integers
+with `fit_ints`, so a header field too wide for its column fails only
+its row; decoded image dimensions are already bounded by the decoders'
+64 MPix cap.
 `decode_image` is REAL for PNG, BMP, GIF and baseline JPEG (pure-Python
 kernels/image.py: zlib IDAT inflate behind the bomb-ratio guard,
 scanline unfiltering, LZW, Huffman entropy decode + IDCT) and returns
@@ -21,7 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from .arrowmap import row_batches
+from .arrowmap import fit_ints, row_batches
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -205,7 +209,7 @@ def extract_audio_features(df: DataFrame,
         base = dict(media_id=row["media_id"], n_bytes=len(payload))
         try:
             feats = audio_features(decode_wav(payload))
-            return [dict(base, status="ok", **feats)]
+            return [fit_ints(dict(base, status="ok", **feats), AUDIO_SCHEMA)]
         except Exception as e:
             return [dict(base, status="failed",
                          error=f"{type(e).__name__}: {e}")]
@@ -245,17 +249,16 @@ def extract_video_meta(df: DataFrame,
         base = dict(media_id=row["media_id"], n_bytes=len(payload))
         try:
             m = parse_mp4(payload)
-            return [dict(base, width=m.width, height=m.height,
-                         duration_ms=m.duration_ms,
-                         n_tracks=m.n_tracks,
-                         track_kinds=m.track_kinds,
-                         brand=m.brand,
-                         codec=m.codec or None,
-                         codec_profile=m.codec_profile or None,
-                         codec_level=m.codec_level or None,
-                         coded_width=m.coded_width or None,
-                         coded_height=m.coded_height or None,
-                         status="ok")]
+            return [fit_ints(dict(
+                base, width=m.width, height=m.height,
+                duration_ms=m.duration_ms, n_tracks=m.n_tracks,
+                track_kinds=m.track_kinds, brand=m.brand,
+                codec=m.codec or None,
+                codec_profile=m.codec_profile or None,
+                codec_level=m.codec_level or None,
+                coded_width=m.coded_width or None,
+                coded_height=m.coded_height or None,
+                status="ok"), VIDEO_SCHEMA)]
         except Exception as e:
             return [dict(base, status="failed",
                          error=f"{type(e).__name__}: {e}")]
@@ -365,19 +368,21 @@ def extract_container_meta(df: DataFrame,
         try:
             if payload[:4] == b"\x1aE\xdf\xa3":
                 m = parse_webm(payload)
-                return [dict(
+                out = dict(
                     media_id=mid, container=m.doctype, width=m.width,
                     height=m.height, duration_ms=m.duration_ms,
                     video_codec=m.video_codec,
                     audio_codec=m.audio_codec,
-                    n_tracks=m.n_tracks, status="ok")]
-            a = parse_avi(payload)
-            return [dict(
-                media_id=mid, container="avi", width=a.width,
-                height=a.height, duration_ms=a.duration_ms,
-                video_codec=a.video_codec,
-                audio_codec="pcm" if a.audio_streams else None,
-                fps=a.fps, n_tracks=a.n_streams, status="ok")]
+                    n_tracks=m.n_tracks, status="ok")
+            else:
+                a = parse_avi(payload)
+                out = dict(
+                    media_id=mid, container="avi", width=a.width,
+                    height=a.height, duration_ms=a.duration_ms,
+                    video_codec=a.video_codec,
+                    audio_codec="pcm" if a.audio_streams else None,
+                    fps=a.fps, n_tracks=a.n_streams, status="ok")
+            return [fit_ints(out, CONTAINER_SCHEMA)]
         except Exception as e:
             return [dict(media_id=mid, status="failed",
                          error=f"{type(e).__name__}: {e}")]

@@ -4,9 +4,10 @@ directly with pyarrow batches — no JVM."""
 from __future__ import annotations
 
 import pyarrow as pa
+import pytest
 from pyspark.sql import types as T
 
-from sparktika.pipeline.arrowmap import row_batches
+from sparktika.pipeline.arrowmap import fit_ints, row_batches
 from sparktika.pipeline.schema import EXTRACTED_SCHEMA
 
 OUT = T.StructType([
@@ -46,13 +47,27 @@ def test_flat_map_one_output_batch_per_input_batch():
     assert [b.num_rows for b in outs] == [2, 0, 1]
     assert outs[0].to_pylist()[1] == {"id": 2, "n": 1, "status": None,
                                       "error": None}
+    assert outs[1].schema.names == ["id", "n", "status", "error"]
+    assert outs[1].schema.field("n").type == pa.int32()
 
 
-def test_empty_output_batch_keeps_the_declared_schema():
-    (out,) = _run(lambda row: [], OUT, [_ids(1, 2, 3)])
-    assert out.num_rows == 0
-    assert out.schema.names == ["id", "n", "status", "error"]
-    assert out.schema.field("n").type == pa.int32()
+def test_fit_ints_raises_inside_the_row_function():
+    assert fit_ints({"id": 1, "n": -(1 << 31)}, OUT)["n"] == -(1 << 31)
+    assert fit_ints({"id": (1 << 63) - 1, "n": None}, OUT)["n"] is None
+    with pytest.raises(ValueError, match="n=4294967295 .* 32-bit"):
+        fit_ints({"id": 1, "n": 0xFFFFFFFF}, OUT)
+    with pytest.raises(ValueError, match="64-bit"):
+        fit_ints({"id": 1 << 63}, OUT)
+
+    def fn(row):
+        try:
+            return [fit_ints({"id": row["id"], "n": row["id"] << 31,
+                              "status": "ok"}, OUT)]
+        except ValueError as e:
+            return [{"id": row["id"], "status": "failed", "error": str(e)}]
+
+    (out,) = _run(fn, OUT, [_ids(0, 1)])
+    assert [r["status"] for r in out.to_pylist()] == ["ok", "failed"]
 
 
 def test_nested_link_and_metadata_values_round_trip():

@@ -180,6 +180,43 @@ def test_video_pipeline_contains_failures():
         s.stop()
 
 
+def test_header_fields_outside_the_column_range_fail_one_row():
+    """Unsigned 32/64-bit header fields that overflow their int columns
+    degrade that one row to status='failed'; the task still succeeds."""
+    from sparktika.kernels.video import build_avi
+    from sparktika.pipeline.session import build_session
+    from sparktika.pipeline.multimodal import (
+        extract_audio_features, extract_container_meta, extract_video_meta)
+    from sparktika.synth import build_mp4
+
+    def box(t, b):
+        return struct.pack(">I", 8 + len(b)) + t + b
+
+    long_mp4 = box(b"ftyp", b"mp42\x00\x00\x00\x00") + box(b"moov", box(
+        b"mvhd", b"\x01\x00\x00\x00" + b"\x00" * 16
+        + struct.pack(">IQ", 1, 1 << 40) + b"\x00" * 80))
+    s = build_session(master="local[1]", shuffle_partitions=1)
+    try:
+        def run(op, *payloads):
+            df = s.createDataFrame(list(enumerate(payloads)),
+                                   "media_id long, payload binary")
+            return [(r.media_id, r.status, r.error) for r in
+                    op(df).orderBy("media_id").collect()]
+
+        for op, good, bad in [
+            (extract_container_meta, build_avi(64, 48, 10, 25),
+             build_avi(0xFFFFFFFF, 48, 10, 25)),
+            (extract_audio_features, _wav(np.array([1, 2, 3]), bits=8),
+             _wav(np.array([1, 2, 3]), rate=0xFFFFFFFF, bits=8)),
+            (extract_video_meta, build_mp4(0), long_mp4),
+        ]:
+            (_, ok, _), (_, failed, err) = run(op, good, bad)
+            assert (ok, failed) == ("ok", "failed"), op.__name__
+            assert err.startswith("ValueError: ") and "32-bit" in err, err
+    finally:
+        s.stop()
+
+
 def test_flac_streaminfo_metadata_route():
     from sparktika.kernels.extract import extract_document
 
