@@ -16,12 +16,14 @@ round-trips identically under any session tz).
 from __future__ import annotations
 
 import hashlib
+import re
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from . import synth
 from .config import ExtractConfig
 from .pipeline import dedup, metrics, resume, similarity, textstats
 from .pipeline.extract import extract_pages
@@ -56,6 +58,26 @@ def _payload(builder: Callable[[int], bytes]):
         return pd.Series([builder(int(i)) for i in ids])
 
     return pandas_udf(payload, BinaryType())(F.col("doc_id"))
+
+
+def _synth_extract(spark: SparkSession, sf_dir: str,
+                   builder: Callable[[int], bytes], suffix: str | Column,
+                   prefix: str = "https://files.example.com/",
+                   cfg: ExtractConfig = SYNTH_CONFIG) -> DataFrame:
+    """Pages `prefix || doc_id || suffix` carrying `builder(doc_id)`, through
+    the real extraction pipeline (mime sniff -> dispatcher -> kernel), with
+    `doc_id` read back from the url. `suffix` may be a per-row Column."""
+    if isinstance(suffix, str):
+        suffix = F.lit(suffix)
+    pages = _docs(spark, sf_dir).select(
+        F.concat(F.lit(prefix), F.col("doc_id").cast("string"), suffix)
+         .alias("url"),
+        _payload(builder).alias("html"),
+    )
+    return extract_pages(pages, cfg).withColumn(
+        "doc_id",
+        F.regexp_extract("url", "^" + re.escape(prefix) + r"(\d+)", 1)
+         .cast("long"))
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,8 +304,6 @@ def extract_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
-    from .pipeline.extract import extract_pages as _ep
-
     def fn(ids: pd.Series, texts: pd.Series) -> pd.Series:
         nav = ('<div><a href="/a">home page</a> <a href="/b">about us</a> '
                '<a href="/c">contact form</a></div>')
@@ -299,7 +319,7 @@ def extract_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").cast("string").alias("url"), "doc_id", "text")
         .withColumn("html", udf("doc_id", "text"))
     )
-    return _ep(pages, SYNTH_CONFIG).select(
+    return extract_pages(pages, SYNTH_CONFIG).select(
         "url", F.coalesce(F.col("main_text"), F.lit("")).alias("main_text"))
 
 
@@ -377,10 +397,8 @@ def _office_pages(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
 
 
 def _office_extract(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    from .pipeline.extract import extract_pages as _ep
-
     pages = _office_pages(spark, sf_dir, kind)
-    return _ep(pages, SYNTH_CONFIG).select("url", "text_extracted")
+    return extract_pages(pages, SYNTH_CONFIG).select("url", "text_extracted")
 
 
 @_register(
@@ -419,7 +437,7 @@ def extract_xlsb_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells — rendered identically to the xlsx walker (cross-format
     parity pytest). Tika 1.20 parity: POI XSSFB path via tika-parsers
     (reference build.gradle)."""
-    ext = _payload_extract(spark, sf_dir, "build_xlsb", ".xlsb")
+    ext = _synth_extract(spark, sf_dir, synth.build_xlsb, ".xlsb")
     return ext.select("doc_id", "text_extracted",
                       "content_type_detected", "status")
 
@@ -1299,18 +1317,10 @@ FROM documents
 def extract_msg_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MSG kernel end-to-end through the real extraction pipeline (mime
     sniff routes the OLE2 payload, dispatcher routes the MAPI streams)."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_msg
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://mail.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".msg")).alias("url"),
-        _payload(build_msg).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_msg, ".msg",
+                         "https://mail.example.com/")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.msg$", 1).cast("long").alias("msg_id"),
+        F.col("doc_id").alias("msg_id"),
         "title", "text_extracted", "status")
 
 
@@ -1330,7 +1340,6 @@ def extract_json_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON payloads: depth-first string-leaf traversal in document order,
     one line per string value; top-level "title" key surfaces as the
     document title. Numbers/bools are skipped (text-pipeline semantics)."""
-    from .pipeline.extract import extract_pages
 
     def build(i: int) -> bytes:
         return (f'{{"title": "Json doc {i}", "body": "Body text {i}.",'
@@ -1368,22 +1377,16 @@ def extract_charset_utf16(spark: SparkSession, sf_dir: str) -> DataFrame:
     the payload through the MIME text sniff (NULs would otherwise defeat
     the printable-ratio check) and the charset kernel decodes LE/BE to
     the exact original text."""
-    from .pipeline.extract import extract_pages
 
     def build(i: int) -> bytes:
         enc = "utf-16-le" if i % 2 == 0 else "utf-16-be"
         return (f"Utf16 sample {i}. The quick brown fox jumps "
                 "over the lazy dog.").encode(enc)
 
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://text.example.com/u"),
-                 F.col("doc_id").cast("string"), F.lit(".txt")).alias("url"),
-        _payload(build).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, build, ".txt",
+                         "https://text.example.com/u")
     return ext.select(
-        F.regexp_extract("url", r"/u(\d+)\.txt$", 1).cast("long").alias("doc_id"),
+        "doc_id",
         "charset_detected", "text_extracted", "status")
 
 
@@ -1450,18 +1453,10 @@ def extract_doc_subdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppress field INSTRUCTION text (keep only the cached result between
     separator and end marks — Tika HWPF WordExtractor behavior) and split
     the CP space into main/footnotes/headers via FibRgLw97 ccp counts."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_doc_full
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/w"),
-                 F.col("doc_id").cast("string"), F.lit(".doc")).alias("url"),
-        _payload(build_doc_full).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_doc_full, ".doc",
+                         "https://files.example.com/w")
     return ext.select(
-        F.regexp_extract("url", r"/w(\d+)\.doc$", 1).cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at("metadata", "n-chars-main").getItem(0)
          .cast("int").alias("n_chars_main"),
@@ -1498,18 +1493,10 @@ def extract_msg_attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
     across attachments), text attachments decode inline, binary ones stay
     opaque. Parity target: Tika OutlookExtractor's embedded-attachment
     handling (tika-fork delegates via the auto-detect parser)."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_msg_attach
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://mail.example.com/a"),
-                 F.col("doc_id").cast("string"), F.lit(".msg")).alias("url"),
-        _payload(build_msg_attach).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_msg_attach, ".msg",
+                         "https://mail.example.com/a")
     return ext.select(
-        F.regexp_extract("url", r"/a(\d+)\.msg$", 1).cast("long").alias("msg_id"),
+        F.col("doc_id").alias("msg_id"),
         "title", "text_extracted",
         F.element_at("metadata", "n-attachments").getItem(0)
          .cast("int").alias("n_attachments"),
@@ -1536,18 +1523,10 @@ def extract_msg_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedded-message attachments (PidTagAttachDataObject sub-storage):
     the inner message's subject and body render inline, one nesting level
     deep (Tika's embedded-document recursion posture)."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_msg_nested
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://mail.example.com/n"),
-                 F.col("doc_id").cast("string"), F.lit(".msg")).alias("url"),
-        _payload(build_msg_nested).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_msg_nested, ".msg",
+                         "https://mail.example.com/n")
     return ext.select(
-        F.regexp_extract("url", r"/n(\d+)\.msg$", 1).cast("long").alias("msg_id"),
+        F.col("doc_id").alias("msg_id"),
         "title", "text_extracted",
         F.element_at("metadata", "n-attachments").getItem(0)
          .cast("int").alias("n_attachments"),
@@ -1568,18 +1547,10 @@ FROM documents
 def extract_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RTF kernel end-to-end through the extraction pipeline (magic-byte
     mime routing -> control-word scanner -> info/title metadata)."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_rtf
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".rtf")).alias("url"),
-        _payload(build_rtf).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_rtf, ".rtf",
+                         "https://docs.example.com/")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.rtf$", 1).cast("long").alias("rtf_id"),
+        F.col("doc_id").alias("rtf_id"),
         "title", "text_extracted", "status")
 
 
@@ -1647,7 +1618,7 @@ def extract_tnef_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk, subject/body extraction, attachment re-dispatch through the
     guarded embedded recursion (Tika 1.20 TNEFParser posture via
     tika-parsers, gradle.properties:5)."""
-    ext = _payload_extract(spark, sf_dir, "build_tnef", ".dat")
+    ext = _synth_extract(spark, sf_dir, synth.build_tnef, ".dat")
     return ext.select(
         "doc_id", "title", "text_extracted", "content_type_detected",
         F.element_at("metadata", "attachment-names").getItem(0)
@@ -1686,7 +1657,7 @@ def extract_sqlite_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     records, overflow chains — no sqlite3 library at parse time, so a
     crafted database never reaches the C engine. Tika 1.20 parity:
     SQLite3Parser via tika-parsers (reference build.gradle)."""
-    ext = _payload_extract(spark, sf_dir, "build_sqlite", ".sqlite")
+    ext = _synth_extract(spark, sf_dir, synth.build_sqlite, ".sqlite")
     return ext.select(
         "doc_id", "text_extracted",
         F.element_at("metadata", "n-tables").getItem(0)
@@ -1715,19 +1686,9 @@ def extract_lz4_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksums, legacy frames) — no stdlib codec exists. Store-mode
     corpora here (CLI-validated); compressed paths pinned against
     lz4-CLI goldens in tests/test_lz4_kernel.py."""
-    from .synth import build_lz4_txt
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".txt.lz4")).alias("url"),
-        _payload(build_lz4_txt).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_lz4_txt, ".txt.lz4")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.txt\.lz4", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at("metadata", "Content-Encoding-Outer").getItem(0)
          .alias("outer_codec"),
@@ -1927,20 +1888,10 @@ def extract_iwork_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     APXL index (plain or .gz). Detection demands BOTH
     buildVersionHistory.plist and an index entry, so generic zips never
     misroute; odd Pages docs carry a gzip index."""
-    from .synth import build_iwork
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".pages")).alias("url"),
-        _payload(build_iwork).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_iwork, ".pages")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pages", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at(meta, "n-paragraphs").getItem(0)
          .cast("long").alias("n_paragraphs"),
@@ -2036,22 +1987,14 @@ def extract_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     usually gzip-wrapped, which the wrapper chain handles
     transparently). URL rows land in metadata; the protocol's own 50k
     per-file cap bounds memory."""
-    from .synth import build_sitemap
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://crawl.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.when(F.col("doc_id") % 2 == 1,
-                        F.lit("/sitemap.xml.gz"))
-                  .otherwise(F.lit("/sitemap.xml"))).alias("url"),
-        _payload(build_sitemap).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(
+        spark, sf_dir, synth.build_sitemap,
+        F.when(F.col("doc_id") % 2 == 1, F.lit("/sitemap.xml.gz"))
+         .otherwise(F.lit("/sitemap.xml")),
+        "https://crawl.example.com/")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"com/(\d+)/sitemap", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         F.element_at(meta, "sitemap-kind").getItem(0).alias("kind"),
         F.element_at(meta, "sitemap-urls").getItem(0)
          .cast("long").alias("n_urls"),
@@ -2087,20 +2030,12 @@ def extract_snappy_deflate_text(spark: SparkSession,
     zstd/lz4/lzma/snappy/deflate; brotli has no magic and no lib —
     out of scope). Even docs ride snappy (%3==0 uncompressed chunks,
     rest compressed), odd docs zlib."""
-    from .synth import build_modern_codec_txt
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.when(F.col("doc_id") % 2 == 0, F.lit(".txt.sz"))
-                  .otherwise(F.lit(".txt.zz"))).alias("url"),
-        _payload(build_modern_codec_txt).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(
+        spark, sf_dir, synth.build_modern_codec_txt,
+        F.when(F.col("doc_id") % 2 == 0, F.lit(".txt.sz"))
+         .otherwise(F.lit(".txt.zz")))
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.txt\.", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at("metadata", "Content-Encoding-Outer").getItem(0)
          .alias("outer_codec"),
@@ -2132,20 +2067,10 @@ def extract_mat_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shapes as the body (1xN char variables also render their
     string), header facts as metadata. miCOMPRESSED elements inflate
     under the shared guard — the synth string variable rides one."""
-    from .synth import build_mat_file
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".mat")).alias("url"),
-        _payload(build_mat_file).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_mat_file, ".mat")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.mat", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at(meta, "mat-header").getItem(0).alias("mat_header"),
         F.element_at(meta, "mat-variables").getItem(0)
@@ -2175,20 +2100,10 @@ def extract_midi_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     lyric/text meta events become the body (lyrics arrive sliced per
     note and join without separators), track/format/division facts
     become metadata. Real channel events incl. running status walk."""
-    from .synth import build_midi_song
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".mid")).alias("url"),
-        _payload(build_midi_song).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_midi_song, ".mid")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.mid", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at(meta, "midi-track-names").getItem(0)
          .alias("first_track"),
@@ -2228,20 +2143,11 @@ def extract_font_psd_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture: header facts only). Weak sfnt magic is validator-gated in
     kernels/mime.py (is_font); TTC collections report the first font
     plus the member count; every 9th doc runs the TTC path."""
-    from .synth import build_design_asset
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://assets.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".bin")).alias("url"),
-        _payload(build_design_asset).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_design_asset, ".bin",
+                         "https://assets.example.com/")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.bin", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "title",
         F.element_at(meta, "font-family").getItem(0).alias("font_family"),
         F.element_at(meta, "font-glyphs").getItem(0)
@@ -2285,20 +2191,10 @@ def extract_dbf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection demands four mutually consistent header facts
     (kernels/mime.py); deleted records skip (the %4==0 docs exercise
     that path); rows render TAB-joined like DBFParser's XHTML table."""
-    from .synth import build_dbf_table
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".dbf")).alias("url"),
-        _payload(build_dbf_table).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_dbf_table, ".dbf")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.dbf", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at(meta, "dbf-records").getItem(0)
          .cast("long").alias("n_records"),
@@ -2339,20 +2235,11 @@ def extract_feed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the feed title the document title, entry links/dates metadata —
     web crawls are full of these and the XML route previously rendered
     them as undifferentiated element soup."""
-    from .synth import build_feed
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://feeds.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit("/feed.xml")).alias("url"),
-        _payload(build_feed).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_feed, "/feed.xml",
+                         "https://feeds.example.com/")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"com/(\d+)/feed", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         "title",
         F.element_at(meta, "feed-description").getItem(0)
@@ -2392,24 +2279,14 @@ def extract_executable_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tika-parsers:1.20 jar, reference build.gradle). Metadata-only by
     design — platform facts from the public ABI headers (System V
     gABI, Microsoft PE/COFF spec, mach-o/loader.h), never text."""
-    from .synth import build_executable
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".bin")).alias("url"),
-        _payload(build_executable).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_executable, ".bin")
     meta = F.col("metadata")
 
     def one(key):
         return F.element_at(meta, key).getItem(0)
 
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.bin", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         one("exe-format").alias("exe_format"),
         one("exe-machine").alias("machine"),
         one("exe-bits").alias("bits"),
@@ -2444,20 +2321,12 @@ def extract_legacy_codec_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec logic in its own tree). The %3==0 .Z bodies carry a forced
     CLEAR code so the reset + 8-code-group realignment path — the
     subtle part of the format — runs in the driver gate."""
-    from .synth import build_legacy_codec_txt
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.when(F.col("doc_id") % 2 == 0, F.lit(".txt.Z"))
-                  .otherwise(F.lit(".txt.lzma"))).alias("url"),
-        _payload(build_legacy_codec_txt).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(
+        spark, sf_dir, synth.build_legacy_codec_txt,
+        F.when(F.col("doc_id") % 2 == 0, F.lit(".txt.Z"))
+         .otherwise(F.lit(".txt.lzma")))
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.txt\.", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at("metadata", "Content-Encoding-Outer").getItem(0)
          .alias("outer_codec"),
@@ -2495,7 +2364,7 @@ def extract_chm_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real LZXC v2 section (ControlData + ResetTable + Content) whose
     two packed topics must extract; machinery/stream corruption refuses
     with the reason in metadata, never garbage (pytest)."""
-    ext = _payload_extract(spark, sf_dir, "build_chm", ".chm")
+    ext = _synth_extract(spark, sf_dir, synth.build_chm, ".chm")
     return ext.select(
         "doc_id", "text_extracted", "title",
         F.element_at("metadata", "container-entries").getItem(0)
@@ -2530,7 +2399,7 @@ def extract_ar_cpio_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix — ar common/GNU-longname/BSD-inline names, cpio newc/crc/
     odc — and each archive holds one .txt plus one .html member, so
     text is a pure function of doc_id % 2 (see synth.build_archive)."""
-    ext = _payload_extract(spark, sf_dir, "build_archive", ".arc")
+    ext = _synth_extract(spark, sf_dir, synth.build_archive, ".arc")
     return ext.select(
         "doc_id", "text_extracted", "content_type_detected",
         F.element_at("metadata", "container-entries").getItem(0)
@@ -2561,7 +2430,7 @@ def extract_arj_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     CRC32 verification) and refuses methods 1-4 with a metadata count,
     exactly the reference stack's capability envelope. %3==0 corpus ids
     plant one compressed member to pin the refusal path."""
-    ext = _payload_extract(spark, sf_dir, "build_arj", ".arj")
+    ext = _synth_extract(spark, sf_dir, synth.build_arj, ".arj")
     return ext.select(
         "doc_id", "text_extracted", "content_type_detected",
         F.element_at("metadata", "container-entries").getItem(0)
@@ -2614,7 +2483,7 @@ def extract_pst_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendering, with attachment subnodes recursed through the dispatcher
     under the shared embed budget. Tika 1.20 parity: java-libpst via
     tika-parsers (reference build.gradle)."""
-    ext = _payload_extract(spark, sf_dir, "build_pst", ".pst")
+    ext = _synth_extract(spark, sf_dir, synth.build_pst, ".pst")
     return ext.select(
         "doc_id", "title", "text_extracted",
         F.element_at("metadata", "n-messages").getItem(0)
@@ -2650,7 +2519,7 @@ def extract_vcf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     vCard 2.1 card with ENCODING=QUOTED-PRINTABLE soft line breaks and
     =XX escapes; Tika 1.20 VCardParser posture via tika-parsers,
     gradle.properties:5)."""
-    ext = _payload_extract(spark, sf_dir, "build_vcf", ".vcf")
+    ext = _synth_extract(spark, sf_dir, synth.build_vcf, ".vcf")
     return ext.select(
         "doc_id", "title", "text_extracted", "content_type_detected",
         F.element_at("metadata", "n-cards").getItem(0)
@@ -2681,7 +2550,7 @@ def extract_ics_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """iCalendar kernel end-to-end (RFC 5545: VEVENT properties extract,
     VTODO excluded, escaped \\n in DESCRIPTION; Tika 1.20 ICalParser
     posture via tika-parsers)."""
-    ext = _payload_extract(spark, sf_dir, "build_ics", ".ics")
+    ext = _synth_extract(spark, sf_dir, synth.build_ics, ".ics")
     return ext.select(
         "doc_id", "title", "text_extracted", "content_type_detected",
         F.element_at("metadata", "n-events").getItem(0)
@@ -2720,7 +2589,7 @@ def extract_mbox_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     asctime envelope split, mboxo >From unquoting, per-message RFC 822
     parse — Tika 1.20 MboxParser posture, linked by the reference via
     tika-parsers, gradle.properties:5)."""
-    ext = _payload_extract(spark, sf_dir, "build_mbox", ".mbox")
+    ext = _synth_extract(spark, sf_dir, synth.build_mbox, ".mbox")
     return ext.select(
         F.col("doc_id").alias("mbox_id"),
         "title", "text_extracted",
@@ -2747,18 +2616,10 @@ FROM documents
 def extract_eml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 822 email kernel end-to-end (header-block mime sniff routes the
     payload; multipart walk with base64 part decoding)."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_eml
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://mail.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".eml")).alias("url"),
-        _payload(build_eml).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_eml, ".eml",
+                         "https://mail.example.com/")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.eml$", 1).cast("long").alias("eml_id"),
+        F.col("doc_id").alias("eml_id"),
         "title", "text_extracted",
         F.element_at(F.col("metadata"), "n-parts")[0].cast("int").alias("n_parts"),
         "status")
@@ -3083,7 +2944,7 @@ def extract_ogg_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ogg Vorbis/Opus comment tags through the audio route: RFC 3533
     page/packet reassembly + the shared Vorbis-comment field reader —
     completes the audio tag triad (ID3 / FLAC / Ogg)."""
-    ext = _payload_extract(spark, sf_dir, "build_ogg_tags", ".ogg")
+    ext = _synth_extract(spark, sf_dir, synth.build_ogg_tags, ".ogg")
     return ext.select(
         F.col("doc_id").alias("media_id"),
         "title",
@@ -3109,7 +2970,7 @@ def extract_flac_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAC VORBIS_COMMENT tag metadata (title/artist/album) through the
     audio route, alongside the STREAMINFO fields — the FLAC tag surface
     matching the ID3 path's keys."""
-    ext = _payload_extract(spark, sf_dir, "build_flac_tags", ".flac")
+    ext = _synth_extract(spark, sf_dir, synth.build_flac_tags, ".flac")
     return ext.select(
         F.col("doc_id").alias("media_id"),
         "title",
@@ -3136,7 +2997,7 @@ def extract_mp3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ID3v2 text-frame metadata (title/artist/album) through the audio
     route — the Mp3Parser tag surface Tika users consume (keys title /
     xmpDM:artist / xmpDM:album)."""
-    ext = _payload_extract(spark, sf_dir, "build_mp3_id3", ".mp3")
+    ext = _synth_extract(spark, sf_dir, synth.build_mp3_id3, ".mp3")
     return ext.select(
         F.col("doc_id").alias("media_id"),
         "title",
@@ -3162,7 +3023,7 @@ def media_heif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     primary-item ispe dims resolved via pitm -> ipma -> ipco (ISO
     23008-12) — previously detect-only (CLAUDE.md known gaps); tile
     decode stays out of scope like the video codec routes."""
-    ext = _payload_extract(spark, sf_dir, "build_heif", ".heif")
+    ext = _synth_extract(spark, sf_dir, synth.build_heif, ".heif")
     return ext.select(
         F.col("doc_id").alias("media_id"),
         "content_type_detected",
@@ -3257,21 +3118,13 @@ def extract_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ImageParser parity): MIME sniff routes them, header-only dimension
     parsing lands in metadata, status ok with an empty body — no pixel
     decode in the text pipeline."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_bmp, build_gif, build_jpeg, build_png, build_tiff
+    builders = {0: synth.build_png, 1: synth.build_bmp, 2: synth.build_gif,
+                3: synth.build_jpeg, 4: synth.build_tiff}
 
-    builders = {0: build_png, 1: build_bmp, 2: build_gif,
-                3: build_jpeg, 4: build_tiff}
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://img.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".img")).alias("url"),
-        _payload(lambda i: builders[i % 5](i)).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, lambda i: builders[i % 5](i), ".img",
+                         "https://img.example.com/")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.img$", 1).cast("long").alias("doc_id"),
+        "doc_id",
         "content_type_detected",
         F.element_at("metadata", "Image Width").getItem(0)
          .cast("int").alias("width"),
@@ -3300,19 +3153,11 @@ def extract_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure (IFD0 + ExifIFD) is walked header-only and surfaced under
     Tika's public names (tiff:Make/Model/Orientation,
     exif:DateTimeOriginal) alongside the SOF dimensions."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_jpeg_exif
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://photos.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".jpg")).alias("url"),
-        _payload(build_jpeg_exif).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_jpeg_exif, ".jpg",
+                         "https://photos.example.com/")
     m = lambda k: F.element_at("metadata", k).getItem(0)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.jpg$", 1).cast("long").alias("doc_id"),
+        "doc_id",
         m("tiff:Make").alias("make"),
         m("tiff:Model").alias("model"),
         m("tiff:Orientation").cast("int").alias("orientation"),
@@ -3395,18 +3240,10 @@ FROM documents
 def extract_tar_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ustar container kernel end-to-end (offset-257 magic sniff routes the
     payload; per-entry MIME routing concatenates the text entries)."""
-    from .pipeline.extract import extract_pages
-    from .synth import build_tar
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://archive.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".tar")).alias("url"),
-        _payload(build_tar).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_tar, ".tar",
+                         "https://archive.example.com/")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.tar$", 1).cast("long").alias("tar_id"),
+        F.col("doc_id").alias("tar_id"),
         "text_extracted",
         F.element_at(F.col("metadata"), "container-entries")[0]
          .cast("int").alias("n_entries"),
@@ -3582,21 +3419,15 @@ def extract_embedded_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     text file plus an embedded Word sub-document — all payloads routed
     back through extract_document / tree-scoped office kernels under the
     max_embed_depth budget."""
-    from .synth import build_doc_embedded, build_msg_deep
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://embed.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.when(F.col("doc_id") % 2 == 0, F.lit(".msg"))
-                  .otherwise(F.lit(".doc"))).alias("url"),
-        _payload(lambda i: build_msg_deep(i) if i % 2 == 0
-                 else build_doc_embedded(i)).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(
+        spark, sf_dir,
+        lambda i: (synth.build_msg_deep(i) if i % 2 == 0
+                   else synth.build_doc_embedded(i)),
+        F.when(F.col("doc_id") % 2 == 0, F.lit(".msg"))
+         .otherwise(F.lit(".doc")),
+        "https://embed.example.com/")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.(msg|doc)$", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted", "title", "status",
         # reference-reserved names (main/TikaConstants.java:20-27),
         # surfaced r5: hierarchical per-child paths + depth-budget flag
@@ -3646,27 +3477,6 @@ def media_h264_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "coded_width", "coded_height", "duration_ms", "status")
 
 
-def _payload_extract(spark: SparkSession, sf_dir: str, builder_name: str,
-                     suffix: str, cfg: ExtractConfig = None) -> DataFrame:
-    """pages built from a synth builder over doc_id, through the real
-    extraction pipeline (mime sniff -> dispatcher -> kernel)."""
-    from . import synth as _synth
-
-    builder = getattr(_synth, builder_name)
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(suffix)).alias("url"),
-        _payload(builder).alias("html"),
-    )
-    ext = extract_pages(pages, cfg if cfg is not None else SYNTH_CONFIG)
-    return ext.withColumn(
-        "doc_id",
-        F.regexp_extract("url", r"/(\d+)\.\w+$", 1).cast("long"))
-
-
 @_register(
     "extract_xml_text",
     """
@@ -3687,7 +3497,7 @@ def extract_xml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     character content line-per-text-node, dc:title local name -> title —
     DcXMLParser posture (Tika 1.20), replacing the round-2 HTML-walker
     ride-along whose safe-element sets could drop XML element text."""
-    ext = _payload_extract(spark, sf_dir, "build_xml", ".xml")
+    ext = _synth_extract(spark, sf_dir, synth.build_xml, ".xml")
     return ext.select(
         "doc_id", "text_extracted", "title", "content_type_detected",
         F.element_at("metadata", "n-elements").getItem(0)
@@ -3713,7 +3523,7 @@ def extract_odt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the zip route, content.xml paragraph/heading/tab walk — the most
     common real-world format family the engine lacked (VERDICT r02
     item 8; Tika 1.20 OpenDocumentParser parity posture)."""
-    ext = _payload_extract(spark, sf_dir, "build_odt", ".odt")
+    ext = _synth_extract(spark, sf_dir, synth.build_odt, ".odt")
     return ext.select(
         "doc_id", "text_extracted", "content_type_detected",
         F.element_at("metadata", "n-paragraphs").getItem(0)
@@ -3739,7 +3549,7 @@ def extract_ods_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OpenDocument spreadsheet: table/row/cell walk with column-repeat
     handling, rendered in the xlsx kernel's sheet-name + TAB-joined-row
     shape."""
-    ext = _payload_extract(spark, sf_dir, "build_ods", ".ods")
+    ext = _synth_extract(spark, sf_dir, synth.build_ods, ".ods")
     return ext.select(
         "doc_id", "text_extracted", "content_type_detected",
         F.element_at("metadata", "sheet-names").getItem(0)
@@ -3764,7 +3574,7 @@ def extract_7z_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7z member extraction end-to-end: Copy + raw-LZMA2 folders through
     the from-scratch header parser (kernels/sevenzip.py; Tika 1.20
     Seven7ZipParser posture — the r3 verdict's missing item 3)."""
-    ext = _payload_extract(spark, sf_dir, "build_7z_doc", ".7z")
+    ext = _synth_extract(spark, sf_dir, synth.build_7z_doc, ".7z")
     return ext.select(
         "doc_id", "text_extracted", "content_type_detected",
         F.element_at("metadata", "container-entries").getItem(0)
@@ -3792,7 +3602,7 @@ def extract_odp_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OpenDocument presentation: draw:page frames AND presenter notes
     through the paragraph walk (Tika 1.20 OpenDocumentParser covers the
     whole odt/ods/odp family — the r3 verdict's top format gap)."""
-    ext = _payload_extract(spark, sf_dir, "build_odp", ".odp")
+    ext = _synth_extract(spark, sf_dir, synth.build_odp, ".odp")
     return ext.select(
         "doc_id", "text_extracted", "content_type_detected",
         F.element_at("metadata", "n-slides").getItem(0)
@@ -3818,7 +3628,7 @@ def extract_epub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     XHTML chapters through the HTML walker (Tika 1.20 EpubParser parity
     posture); the synth corpus's manifest order differs from spine order
     so reading order is actually exercised."""
-    ext = _payload_extract(spark, sf_dir, "build_epub", ".epub")
+    ext = _synth_extract(spark, sf_dir, synth.build_epub, ".epub")
     return ext.select(
         "doc_id", "text_extracted", "title", "content_type_detected",
         F.element_at("metadata", "n-spine-items").getItem(0)
@@ -4068,20 +3878,14 @@ def extract_compressed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_length decompress + nested-compression refusal) re-dispatching
     the inner payload — completes the gzip route's family; a real crawl
     carries .bz2/.xz sidecar files constantly."""
-    from .synth import build_bz2_txt, build_xz_txt
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".txt"),
-                 F.when(F.col("doc_id") % 2 == 0, F.lit(".bz2"))
-                  .otherwise(F.lit(".xz"))).alias("url"),
-        _payload(lambda i: build_bz2_txt(i) if i % 2 == 0
-                 else build_xz_txt(i)).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(
+        spark, sf_dir,
+        lambda i: (synth.build_bz2_txt(i) if i % 2 == 0
+                   else synth.build_xz_txt(i)),
+        F.when(F.col("doc_id") % 2 == 0, F.lit(".txt.bz2"))
+         .otherwise(F.lit(".txt.xz")))
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.txt", 1).cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at("metadata", "Content-Encoding-Outer").getItem(0)
          .alias("outer_codec"),
@@ -4110,19 +3914,9 @@ def extract_zstd_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic, CLI-validated); odd ids carry a leading skippable
     frame, ids % 3 == 0 force multi-block; the compressed paths are
     pinned against zstd-CLI goldens in tests/test_zstd_kernel.py."""
-    from .synth import build_zstd_txt
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".txt.zst")).alias("url"),
-        _payload(build_zstd_txt).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_zstd_txt, ".txt.zst")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.txt\.zst", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at("metadata", "Content-Encoding-Outer").getItem(0)
          .alias("outer_codec"),
@@ -4234,7 +4028,7 @@ def extract_pdf_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PDF 32000 §7.11.4 name tree -> filespec -> EF stream) — extends
     embedded-document recursion to the third container family after
     OLE2 and zip."""
-    ext = _payload_extract(spark, sf_dir, "build_pdf_embedded", ".pdf")
+    ext = _synth_extract(spark, sf_dir, synth.build_pdf_embedded, ".pdf")
     return ext.select(
         "doc_id", "text_extracted",
         F.element_at("metadata", "embedded-names").getItem(0)
@@ -4300,7 +4094,7 @@ def extract_docx_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ole10Native-wrapped OLE2 shape Word produces) recursed through the
     dispatcher — the OOXML leg of embedded-document recursion alongside
     OLE2 ObjectPool, .msg attachments, and PDF /EmbeddedFiles."""
-    ext = _payload_extract(spark, sf_dir, "build_docx_embedded", ".docx")
+    ext = _synth_extract(spark, sf_dir, synth.build_docx_embedded, ".docx")
     return ext.select(
         "doc_id", "text_extracted",
         F.element_at("metadata", "embedded-names").getItem(0)
@@ -4327,8 +4121,8 @@ def extract_html_meta_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes): first occurrence wins, entity-decoded, reserved keys never
     clobbered. Runs with html_meta_tags=True; the default-off flag keeps
     the reference fixture's pinned 8-key golden byte-stable."""
-    ext = _payload_extract(spark, sf_dir, "build_html_meta", ".html",
-                           cfg=SYNTH_CONFIG.with_(html_meta_tags=True))
+    ext = _synth_extract(spark, sf_dir, synth.build_html_meta, ".html",
+                         cfg=SYNTH_CONFIG.with_(html_meta_tags=True))
     return ext.select(
         "doc_id",
         F.element_at("metadata", "description").getItem(0).alias("description"),
@@ -4365,20 +4159,12 @@ def media_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries: FLAC STREAMINFO (doc_id%3==0), MP3 frame header + ID3 skip
     (==1), Ogg Vorbis/Opus identification headers (==2) — all values
     pure functions of media_id (synth.build_flac/mp3/ogg)."""
-    from .synth import build_flac, build_mp3, build_ogg
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://a.example.com/"),
-                 F.col("doc_id").cast("string"), F.lit(".audio")).alias("url"),
-        _payload(lambda i: (build_flac, build_mp3, build_ogg)[i % 3](i))
-        .alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    builders = (synth.build_flac, synth.build_mp3, synth.build_ogg)
+    ext = _synth_extract(spark, sf_dir, lambda i: builders[i % 3](i),
+                         ".audio", "https://a.example.com/")
     m = lambda k: F.element_at("metadata", k).getItem(0)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.audio$", 1).cast("long")
-         .alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.col("content_type_detected").alias("codec"),
         m("samplerate").cast("int").alias("samplerate"),
         m("channels").cast("int").alias("channels"),
@@ -4402,7 +4188,7 @@ def media_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebP header dims through the text dispatcher (lossy/lossless/VP8X
     rotate by media_id % 3; dims identical across variants by
     construction)."""
-    ext = _payload_extract(spark, sf_dir, "build_webp", ".webp")
+    ext = _synth_extract(spark, sf_dir, synth.build_webp, ".webp")
     m = lambda k: F.element_at("metadata", k).getItem(0)
     return ext.select(
         F.col("doc_id").alias("media_id"),
@@ -4429,7 +4215,7 @@ FROM documents
 def extract_svg_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SVG through the XML scanner: all text nodes (title first), the
     root element refines the MIME label and supplies width/height."""
-    ext = _payload_extract(spark, sf_dir, "build_svg", ".svg")
+    ext = _synth_extract(spark, sf_dir, synth.build_svg, ".svg")
     m = lambda k: F.element_at("metadata", k).getItem(0)
     return ext.select(
         "doc_id", "text_extracted", "title", "content_type_detected",
@@ -4486,7 +4272,7 @@ def extract_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pdf_crypt.py), per-object keys, /Info string decryption.
     Password-protected / unknown-CFM docs refuse with status
     'unsupported' (tested, not in this corpus)."""
-    ext = _payload_extract(spark, sf_dir, "build_pdf_encrypted", ".pdf")
+    ext = _synth_extract(spark, sf_dir, synth.build_pdf_encrypted, ".pdf")
     return ext.select(
         "doc_id", "text_extracted", "title",
         F.element_at(
@@ -4515,7 +4301,7 @@ def extract_doc_legacy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flat-text legacy path (fcMin/fcMac byte range, cp1252, no table
     stream) — Tika 1.20's HWPFOldDocument posture. Fast-saved (fComplex)
     and XOR-obfuscated files refuse with status rows (pytest)."""
-    ext = _payload_extract(spark, sf_dir, "build_doc_legacy", ".doc")
+    ext = _synth_extract(spark, sf_dir, synth.build_doc_legacy, ".doc")
     return ext.select(
         "doc_id", "text_extracted",
         F.coalesce(
@@ -4661,20 +4447,11 @@ def extract_netcdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the body. From-scratch header walk per the public Unidata
     classic-format grammar (kernels/netcdf.py); even docs CDF-1, odd
     CDF-2 (64-bit offsets), record + fixed dims, char + float vars."""
-    from .synth import build_netcdf_file
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://data.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".nc")).alias("url"),
-        _payload(build_netcdf_file).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_netcdf_file, ".nc",
+                         "https://data.example.com/")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.nc", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         F.element_at(meta, "netcdf-version").getItem(0).alias("nc_version"),
         "title",
@@ -4708,20 +4485,10 @@ def extract_vsd_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tika-parsers:1.20, reference build.gradle:24 — its POI HDGF
     decompressor is the only public description of the codec, so the
     body stays out of scope like the PST permute table)."""
-    from .synth import build_vsd
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".vsd")).alias("url"),
-        _payload(build_vsd).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_vsd, ".vsd")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.vsd", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         F.element_at(meta, "visio-signature").getItem(0).alias("signature"),
         "title",
         F.element_at(meta, "author").getItem(0).alias("author"),
@@ -4755,20 +4522,10 @@ def extract_ppt95_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     — exact reference parity, since Tika 1.20/POI 4.0.1 throw
     OldPowerPointFormatException for every pre-97 deck rather than
     extracting text. Even docs PP95, odd PP40."""
-    from .synth import build_ppt_old
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".ppt")).alias("url"),
-        _payload(build_ppt_old).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_ppt_old, ".ppt")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.ppt", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         F.element_at(meta, "ppt-format").getItem(0).alias("ppt_format"),
         F.element_at(meta, "ppt-doc-file-version").getItem(0)
          .cast("long").alias("doc_file_version"),
@@ -4802,20 +4559,10 @@ def extract_wpd_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     WordPerfectParser via tika-parsers:1.20, reference
     build.gradle:24), and password-protected files refuse through the
     EncryptedError path with a queryable encryption kind."""
-    from .synth import build_wpd
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".wpd")).alias("url"),
-        _payload(build_wpd).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_wpd, ".wpd")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.wpd", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "status",
         F.element_at(meta, "encryption").getItem(0).alias("encryption"),
         F.element_at(meta, "wpd-version").getItem(0).alias("wpd_version"),
@@ -4849,9 +4596,7 @@ def extract_dwg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     header text fields are refused with a queryable body-refusal entry
     (Tika 1.20 parity target is DWGParser via tika-parsers:1.20,
     reference build.gradle:24)."""
-    from .synth import build_dwg
-
-    ext = _kernel_pages(spark, sf_dir, build_dwg, "dwg")
+    ext = _synth_extract(spark, sf_dir, synth.build_dwg, ".dwg")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -4888,9 +4633,7 @@ def extract_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     title, AIFC compression fourcc, .au info strings. Exact-rational
     synth (invariant 10): 8000 Hz / frames = 800*(1 + id%3) makes
     duration_ms pure integer arithmetic in both engines."""
-    from .synth import build_audio_header
-
-    ext = _kernel_pages(spark, sf_dir, build_audio_header, "audio")
+    ext = _synth_extract(spark, sf_dir, synth.build_audio_header, ".audio")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -4933,9 +4676,7 @@ def extract_mhtml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     tika-parsers:1.20, build.gradle:24); rendering the root HTML is
     beyond that parity. Webtext-core: browser 'save page as single
     file' output recurs in shared-drive crawls."""
-    from .synth import build_mhtml
-
-    ext = _kernel_pages(spark, sf_dir, build_mhtml, "mht")
+    ext = _synth_extract(spark, sf_dir, synth.build_mhtml, ".mht")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -4947,22 +4688,6 @@ def extract_mhtml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
          .cast("long").alias("n_resources"),
         "content_type_detected",
         "status")
-
-
-def _kernel_pages(spark: SparkSession, sf_dir: str, builder, ext: str):
-    """Shared shape for per-format kernel queries: deterministic synth
-    payloads keyed by doc_id through the full extract_pages path."""
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://files.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(f".{ext}")).alias("url"),
-        _payload(builder).alias("html"),
-    )
-    ext_df = extract_pages(pages, SYNTH_CONFIG)
-    return ext_df.withColumn(
-        "doc_id",
-        F.regexp_extract("url", rf"/(\d+)\.{ext}", 1).cast("long"))
 
 
 @_register(
@@ -4989,9 +4714,7 @@ def extract_deb_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     detects x-debian-package by the same contextual ar magic (reference
     parsers via tika-parsers:1.20, build.gradle:24); control-field
     extraction is beyond that parity."""
-    from .synth import build_deb
-
-    ext = _kernel_pages(spark, sf_dir, build_deb, "deb")
+    ext = _synth_extract(spark, sf_dir, synth.build_deb, ".deb")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5031,9 +4754,7 @@ def extract_rpm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     int32 tags; the cpio payload never touched; 8-byte store alignment
     between headers honored. Tika 1.20 detects x-rpm by the lead magic;
     field extraction is beyond that parity."""
-    from .synth import build_rpm
-
-    ext = _kernel_pages(spark, sf_dir, build_rpm, "rpm")
+    ext = _synth_extract(spark, sf_dir, synth.build_rpm, ".rpm")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5076,9 +4797,7 @@ def extract_lnk_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag (UTF-16LE vs ANSI) — the comment string is the body. Beyond
     Tika 1.20 parity (no .lnk parser there), justified by shared-drive
     crawl frequency."""
-    from .synth import build_lnk
-
-    ext = _kernel_pages(spark, sf_dir, build_lnk, "lnk")
+    ext = _synth_extract(spark, sf_dir, synth.build_lnk, ".lnk")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5118,9 +4837,7 @@ def extract_swf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECT (signed twips), 8.8 fixed frame rate (binary-exact by synth
     design), frame count. Tika 1.20 detects x-shockwave-flash by the
     same signatures; header decode is beyond that parity."""
-    from .synth import build_swf
-
-    ext = _kernel_pages(spark, sf_dir, build_swf, "swf")
+    ext = _synth_extract(spark, sf_dir, synth.build_swf, ".swf")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5160,9 +4877,7 @@ def extract_pnm_pcx_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     consistent header facts, the DBF convention) through the
     ImageParser-parity dims path: header-only width/height into
     metadata, empty body, no pixel decode."""
-    from .synth import build_simple_image
-
-    ext = _kernel_pages(spark, sf_dir, build_simple_image, "img")
+    ext = _synth_extract(spark, sf_dir, synth.build_simple_image, ".img")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5281,9 +4996,7 @@ def extract_abw_gpx(spark: SparkSession, sf_dir: str) -> DataFrame:
     generic XML route smears it in); .gpx yields structured waypoint/
     trackpoint counts and the name list as the body. Both beyond Tika
     1.20 parity (no route for either there)."""
-    from .synth import build_abw_gpx
-
-    ext = _kernel_pages(spark, sf_dir, build_abw_gpx, "xmlx")
+    ext = _synth_extract(spark, sf_dir, synth.build_abw_gpx, ".xmlx")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5370,9 +5083,7 @@ def extract_lha_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     level-2 / extended-header chains refuse loudly. Tika 1.20 routes
     .lzh by the same offset-2 magic but ships no extractor — extraction
     is beyond that parity."""
-    from .synth import build_lha
-
-    ext = _kernel_pages(spark, sf_dir, build_lha, "lzh")
+    ext = _synth_extract(spark, sf_dir, synth.build_lha, ".lzh")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5408,9 +5119,7 @@ def extract_iso_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip/tar/ar — text and HTML inside an image extract like any other
     container member. Beyond Tika 1.20 parity (no ISO parser there);
     software-archive crawls carry disc images widely."""
-    from .synth import build_iso
-
-    ext = _kernel_pages(spark, sf_dir, build_iso, "iso")
+    ext = _synth_extract(spark, sf_dir, synth.build_iso, ".iso")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5497,9 +5206,7 @@ def extract_djvu_tga_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRUEVISION-XFILE-footed files are claimed, kernels/image.py).
     Scanned-document archives carry .djvu widely; both beyond Tika 1.20
     parity."""
-    from .synth import build_djvu_tga
-
-    ext = _kernel_pages(spark, sf_dir, build_djvu_tga, "img2")
+    ext = _synth_extract(spark, sf_dir, synth.build_djvu_tga, ".img2")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5551,9 +5258,7 @@ def extract_tensor_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     never read. Beyond Tika 1.20 parity (none of these formats existed
     in 2019); core value for a training-data engine whose crawl space
     is full of checkpoints."""
-    from .synth import build_tensor_artifact
-
-    ext = _kernel_pages(spark, sf_dir, build_tensor_artifact, "bin")
+    ext = _synth_extract(spark, sf_dir, synth.build_tensor_artifact, ".bin")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5591,9 +5296,7 @@ def extract_ps_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     their offset/length words; the program body is refused by design
     (Tika 1.20 has no PS text parser either — the refusal IS parity,
     the DSC fields are beyond it)."""
-    from .synth import build_ps
-
-    ext = _kernel_pages(spark, sf_dir, build_ps, "ps")
+    ext = _synth_extract(spark, sf_dir, synth.build_ps, ".ps")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5638,9 +5341,7 @@ def extract_fb2_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text), title-info surfaces book title, authors, genre, lang.
     Beyond Tika 1.20 parity (no FB2 parser there); the dominant
     Russian-language e-book format in web crawls."""
-    from .synth import build_fb2
-
-    ext = _kernel_pages(spark, sf_dir, build_fb2, "fb2")
+    ext = _synth_extract(spark, sf_dir, synth.build_fb2, ".fb2")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -5681,9 +5382,7 @@ def extract_fodt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME paragraph walk as packaged .odt (kernels/odf.py _walk_odt), so
     flat and zipped flavors cannot drift. LibreOffice's flat format
     recurs in document-management crawls; beyond Tika 1.20 parity."""
-    from .synth import build_fodt
-
-    ext = _kernel_pages(spark, sf_dir, build_fodt, "fodt")
+    ext = _synth_extract(spark, sf_dir, synth.build_fodt, ".fodt")
     return ext.select(
         "doc_id",
         F.col("text_extracted").alias("text"),
@@ -5725,20 +5424,11 @@ def extract_hdf5_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     SNOD + local-heap groups; v2/v3 features refuse loudly). Even docs
     carry a subgroup with a string dataset; dataset VALUES are never
     read — header metadata only."""
-    from .synth import build_hdf5_file
-
-    docs = _docs(spark, sf_dir)
-    pages = docs.select(
-        F.concat(F.lit("https://data.example.com/"),
-                 F.col("doc_id").cast("string"),
-                 F.lit(".h5")).alias("url"),
-        _payload(build_hdf5_file).alias("html"),
-    )
-    ext = extract_pages(pages, SYNTH_CONFIG)
+    ext = _synth_extract(spark, sf_dir, synth.build_hdf5_file, ".h5",
+                         "https://data.example.com/")
     meta = F.col("metadata")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.h5", 1)
-         .cast("long").alias("doc_id"),
+        "doc_id",
         "text_extracted",
         "title",
         F.element_at(meta, "hdf5-datasets").getItem(0)
@@ -5859,7 +5549,7 @@ def extract_cab_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — the oracle text is codec-independent, so one SQL pins
     every decode path. Members route through the shared zip/tar/7z
     router (container.route_member_text)."""
-    ext = _payload_extract(spark, sf_dir, "build_cab_file", ".cab")
+    ext = _synth_extract(spark, sf_dir, synth.build_cab_file, ".cab")
     return ext.select(
         "doc_id", "text_extracted", "content_type_detected",
         F.element_at("metadata", "container-entries").getItem(0)
@@ -5897,7 +5587,7 @@ def extract_flv_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel per the public Adobe FLV/AMF0 specs (kernels/flv.py);
     binary-exact rational scalars keep the DuckDB twin tie-free
     (invariant 10)."""
-    ext = _payload_extract(spark, sf_dir, "build_flv_file", ".flv")
+    ext = _synth_extract(spark, sf_dir, synth.build_flv_file, ".flv")
     meta = F.col("metadata")
 
     def _num(key: str):
@@ -5942,7 +5632,7 @@ def extract_oldxls_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     record ids (kernels/oldxls.py). Registered UNGATED this round —
     the r7 window is exactly full (42 rotation + 8 new) — it leads
     the r8 rotation; covered by the contract twin + pytest meanwhile."""
-    ext = _payload_extract(spark, sf_dir, "build_oldxls", ".xls")
+    ext = _synth_extract(spark, sf_dir, synth.build_oldxls, ".xls")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -5974,7 +5664,7 @@ def extract_metafile_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     SMALLTEXTOUT) under a neutral .bin suffix, so routing is purely
     content-sniffed (kernels/metafile.py). Registered UNGATED — the r7
     window is full; leads the r8 rotation with extract_oldxls_text."""
-    ext = _payload_extract(spark, sf_dir, "build_metafile", ".bin")
+    ext = _synth_extract(spark, sf_dir, synth.build_metafile, ".bin")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6018,7 +5708,7 @@ def extract_class_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     disambiguates the 0xCAFEBABE magic from Mach-O universal binaries
     by the version word. Registered UNGATED — r7 window full; leads
     the r8 rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_javaclass", ".class")
+    ext = _synth_extract(spark, sf_dir, synth.build_javaclass, ".class")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6052,7 +5742,7 @@ def extract_xps_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kernels/xps.py; beyond strict Tika 1.20 parity — the CAB
     posture). Registered UNGATED — r7 window full; leads the r8
     rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_xps_doc", ".xps")
+    ext = _synth_extract(spark, sf_dir, synth.build_xps_doc, ".xps")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6133,7 +5823,7 @@ def extract_woff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports the wrapped flavor and refuses the Brotli body loudly
     (kernels/font.py — webfonts are ubiquitous in page crawls).
     Registered UNGATED — r7 window full; leads the r8 rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_woff_doc", ".woff")
+    ext = _synth_extract(spark, sf_dir, synth.build_woff_doc, ".woff")
     meta = F.col("metadata")
     return ext.select(
         "doc_id",
@@ -6183,7 +5873,7 @@ def extract_torrent_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond Tika 1.20 parity — crawls surface .torrent files
     constantly). Registered UNGATED — r7 window full; leads the r8
     rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_torrent_doc", ".torrent")
+    ext = _synth_extract(spark, sf_dir, synth.build_torrent_doc, ".torrent")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6220,7 +5910,7 @@ def extract_orc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tika 1.20 parity — completes the data-lake family with Avro,
     Parquet, SQLite). Registered UNGATED — r7 window full; leads the
     r8 rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_orc_doc", ".orc")
+    ext = _synth_extract(spark, sf_dir, synth.build_orc_doc, ".orc")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6255,7 +5945,7 @@ def extract_parquet_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQLite kernel's posture; beyond Tika 1.20 parity, completing the
     data-lake triple with Avro and SQLite). Registered UNGATED — r7
     window full; leads the r8 rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_parquet_doc", ".parquet")
+    ext = _synth_extract(spark, sf_dir, synth.build_parquet_doc, ".parquet")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6286,7 +5976,7 @@ def extract_avro_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kernels/avro.py; beyond Tika 1.20 parity — the CAB/XPS posture;
     data-lake crawls are full of these). Registered UNGATED — r7
     window full; leads the r8 rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_avro_doc", ".avro")
+    ext = _synth_extract(spark, sf_dir, synth.build_avro_doc, ".avro")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6319,7 +6009,7 @@ def extract_applefile_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     fork as an embedded document; AppleDouble resource-fork halves
     yield metadata rows (kernels/applefile.py). Registered UNGATED —
     r7 window full; leads the r8 rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_applefile_doc", ".as")
+    ext = _synth_extract(spark, sf_dir, synth.build_applefile_doc, ".as")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",
@@ -6355,7 +6045,7 @@ def extract_bplist_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.20 parity, the CAB/XPS posture — Tika gained it in TIKA-2619).
     Alias/cycle bombs refuse via visit caps + path cycle detection.
     Registered UNGATED — r7 window full; leads the r8 rotation."""
-    ext = _payload_extract(spark, sf_dir, "build_bplist_doc", ".plist")
+    ext = _synth_extract(spark, sf_dir, synth.build_bplist_doc, ".plist")
     meta = F.col("metadata")
     return ext.select(
         "doc_id", "text_extracted",

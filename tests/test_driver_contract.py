@@ -58,6 +58,20 @@ ORACLED = sorted(entrymod.oracle_sql().keys())
 ROWS_ONLY = sorted(set(entrymod.queries()) - set(ORACLED))
 
 
+def test_gate_priority_names_fill_the_window():
+    """The correctness gate reads only the first 50 queries() entries.
+    _gate_order drops a _GATE_PRIORITY name that is not registered without
+    a word, so a query re-keyed by a bad edit would leave the window
+    unseen. No JVM needed."""
+    from sparktika.queries import _GATE_PRIORITY
+
+    names = list(entrymod.queries())
+    assert [n for n in _GATE_PRIORITY if n not in names] == []
+    assert len(set(_GATE_PRIORITY)) == len(_GATE_PRIORITY)
+    assert len(_GATE_PRIORITY) <= 50
+    assert names[:len(_GATE_PRIORITY)] == _GATE_PRIORITY
+
+
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, ducks, name):
     qfn = entrymod.queries()[name]

@@ -26,6 +26,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_map_only(spark, query_name: str) -> None:
+    """A per-format kernel query is one scan, a payload UDF, a map stage
+    and projections; a refactor that adds a shuffle to it fails here."""
+    from sparktika import queries as Q
+
+    plan = _plan(getattr(Q, query_name)(spark, SF))
+    assert "Exchange" not in plan, plan
+
+
 def test_extract_pages_scan_is_column_pruned(spark, tmp_path):
     """Reading a MATERIALIZED pages table, the scan must read only
     (url, html, content_type-ish) — never text/lang — and the extraction
@@ -209,10 +218,7 @@ def test_r5_kernel_queries_stay_map_only(spark, query_name):
     """r5 verdict item 10: the PST and SQLite extraction queries must
     stay in the shared map-only extract_pages shape — a refactor that
     introduces a shuffle on the per-doc kernel path fails here."""
-    from sparktika import queries as Q
-
-    plan = _plan(getattr(Q, query_name)(spark, SF))
-    assert "Exchange" not in plan, plan
+    _assert_map_only(spark, query_name)
 
 
 def test_stratified_sample_is_single_scan(spark):
@@ -246,10 +252,7 @@ def test_stratified_sample_reproducible(spark):
 def test_r6_kernel_queries_stay_map_only(spark, query_name):
     """r6 additions must stay in the map-only per-doc kernel shape —
     a refactor that introduces a shuffle on these paths fails here."""
-    from sparktika import queries as Q
-
-    plan = _plan(getattr(Q, query_name)(spark, SF))
-    assert "Exchange" not in plan, plan
+    _assert_map_only(spark, query_name)
 
 
 def test_dsir_sample_is_map_only(spark):
@@ -281,10 +284,7 @@ def test_dsir_sample_is_map_only(spark):
                                         "extract_woff_meta"])
 def test_r7_kernel_queries_stay_map_only(spark, query_name):
     """r7 additions must stay in the map-only per-doc kernel shape."""
-    from sparktika import queries as Q
-
-    plan = _plan(getattr(Q, query_name)(spark, SF))
-    assert "Exchange" not in plan, plan
+    _assert_map_only(spark, query_name)
 
 
 def test_frontier_filter_zero_url_shuffle(spark):
@@ -434,13 +434,15 @@ def test_ivfpq_zero_corpus_shuffle_single_encode(spark):
                                         "extract_djvu_tga_meta",
                                         "extract_iso_text",
                                         "extract_lha_text",
-                                        "extract_abw_gpx"])
+                                        "extract_abw_gpx",
+                                        "extract_msg_text",
+                                        "extract_html_meta_tags",
+                                        "extract_image_meta"])
 def test_r8_kernel_queries_stay_map_only(spark, query_name):
-    """r8 additions must stay in the map-only per-doc kernel shape."""
-    from sparktika import queries as Q
-
-    plan = _plan(getattr(Q, query_name)(spark, SF))
-    assert "Exchange" not in plan, plan
+    """r8 additions, plus one query per remaining _synth_extract call
+    shape (non-default url prefix, ExtractConfig override, lambda
+    builder), must stay in the map-only per-doc kernel shape."""
+    _assert_map_only(spark, query_name)
 
 
 def test_bpe_packing_map_only_counting_one_exchange(spark):
