@@ -36,8 +36,6 @@ class ExtractConfig:
     timeout_ms: int = 60_000
     # Collect links during the HTML walk (ref: extractHtmlLinks property).
     extract_links: bool = True
-    # Collapse whitespace in anchor text (ref enables it, TikaForkMain.java:50).
-    collapse_anchor_whitespace: bool = True
     # Also compute boilerplate-stripped main text (density heuristics).
     extract_main_text: bool = True
     # Metadata-only mode: skip text assembly (ref: parseContent=false path).

@@ -30,7 +30,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-AVRO_MIME = "application/avro"
 _MAGIC = b"Obj\x01"
 _MAX_META_PAIRS = 256
 _MAX_BLOCKS = 1_000_000

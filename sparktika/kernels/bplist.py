@@ -33,7 +33,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-BPLIST_MIME = "application/x-bplist"
 _MAGIC = (b"bplist00", b"bplist01")
 
 _MAX_VISITS = 100_000

@@ -26,7 +26,6 @@ from dataclasses import dataclass, field
 
 from .errors import InflateRatioError, KernelError, check_deadline
 
-DEB_MIME = "application/x-debian-package"
 
 _MAX_CONTROL = 16 * 1024 * 1024  # decompressed control.tar cap
 

@@ -19,8 +19,6 @@ from dataclasses import dataclass
 
 from .errors import KernelError
 
-DJVU_MIME = "image/vnd.djvu"
-
 
 @dataclass
 class DjvuResult:

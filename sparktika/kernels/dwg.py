@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from .errors import KernelError
 
-DWG_MIME = "image/vnd.dwg"
 
 BODY_REFUSAL = ("DWG header-section layout not available from retrieved "
                 "public content; header-field decode refused by design "

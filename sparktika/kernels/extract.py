@@ -440,7 +440,6 @@ def _html(d: _Doc) -> ExtractResult:
         max_chars=cfg.max_chars,
         max_depth=cfg.max_depth,
         extract_links=cfg.extract_links,
-        collapse_anchor_whitespace=cfg.collapse_anchor_whitespace,
         collect_blocks=cfg.extract_main_text,
         deadline=d.deadline,
         # metadata-only fast path: skip the writer entirely (O26;

@@ -89,8 +89,6 @@ def sniff_feed_root(root_tag: str | None,
     return None
 
 
-_SITEMAP_NS = "http://www.sitemaps.org/schemas/sitemap/0.9"
-
 
 @dataclass
 class SitemapResult:

@@ -173,10 +173,9 @@ class _LinkBuilder:
     def characters(self, s: str):
         self.text.append(s)
 
-    def build(self, base_uri: str, collapse: bool) -> Link:
-        anchor = "".join(self.text)
-        if collapse:
-            anchor = _WS_COLLAPSE.sub(" ", anchor).strip()
+    def build(self, base_uri: str) -> Link:
+        # whitespace collapsed, as the reference does (TikaForkMain.java:50)
+        anchor = _WS_COLLAPSE.sub(" ", "".join(self.text)).strip()
         return Link(self.type, base_uri, self.uri, self.title, anchor,
                     self.rel, self.params)
 
@@ -488,7 +487,6 @@ def parse_html(
     max_chars: int = -1,
     max_depth: int = 200,
     extract_links: bool = True,
-    collapse_anchor_whitespace: bool = True,
     collect_blocks: bool = True,
     deadline: float | None = None,
     emit_text: bool = True,
@@ -640,7 +638,7 @@ def parse_html(
 
     def handle_link_end(name: str):
         if builder_stack:
-            links.append(builder_stack.pop(0).build(base_uri, collapse_anchor_whitespace))
+            links.append(builder_stack.pop(0).build(base_uri))
 
     def end_effects(name: str):
         """Effects of one endElement event (explicit or synthesized)."""

@@ -37,9 +37,7 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-CLASS_MIME = "application/java-vm"
 _MAGIC = b"\xca\xfe\xba\xbe"
-_MAX_POOL = 65535
 _MAX_MEMBERS = 65535
 
 # tag -> fixed payload size (None: variable)

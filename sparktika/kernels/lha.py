@@ -23,7 +23,6 @@ from dataclasses import dataclass, field
 from .container import route_member_text
 from .errors import KernelError, check_deadline
 
-LHA_MIME = "application/x-lha"
 
 _METHODS = frozenset(b"01234567d")
 _MAX_ENTRIES = 10_000

@@ -24,7 +24,6 @@ from dataclasses import dataclass
 
 from .errors import KernelError
 
-LNK_MIME = "application/x-ms-shortcut"
 
 LNK_CLSID = bytes((0x01, 0x14, 0x02, 0x00, 0x00, 0x00, 0x00, 0x00,
                    0xC0, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x46))

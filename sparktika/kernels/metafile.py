@@ -45,8 +45,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-WMF_MIME = "image/wmf"
-EMF_MIME = "image/emf"
 
 _PLACEABLE_MAGIC = 0x9AC6CDD7
 _EMF_SIGNATURE = 0x464D4520  # " EMF"

@@ -32,7 +32,6 @@ from dataclasses import dataclass, field
 from .eml import _content_type, _decode_body, _parse_headers
 from .errors import KernelError
 
-MHTML_MIME = "multipart/related"
 
 _MAX_PARTS = 512
 

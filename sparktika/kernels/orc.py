@@ -35,7 +35,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-ORC_MIME = "application/x-orc"
 _MAGIC = b"ORC"
 
 _KINDS = {0: "boolean", 1: "byte", 2: "short", 3: "int", 4: "long",

@@ -34,7 +34,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-PARQUET_MIME = "application/x-parquet"
 _MAGIC = b"PAR1"
 
 _PHYSICAL = {0: "boolean", 1: "int32", 2: "int64", 3: "int96",

@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError
 
-PS_MIME = "application/postscript"
 
 BODY_REFUSAL = ("PostScript body text requires executing the program; "
                 "refused by design (DSC metadata extracted instead)")

@@ -27,7 +27,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-RPM_MIME = "application/x-rpm"
 
 _LEAD_MAGIC = b"\xed\xab\xee\xdb"
 _HDR_MAGIC = b"\x8e\xad\xe8\x01"

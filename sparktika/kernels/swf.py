@@ -24,7 +24,6 @@ from dataclasses import dataclass
 
 from .errors import KernelError
 
-SWF_MIME = "application/x-shockwave-flash"
 
 _HEAD_NEED = 512  # decompressed bytes needed for RECT + rate + count
 

@@ -2,8 +2,8 @@
 language-ID and quality scoring helpers.
 
 Pure Python/numpy, deterministic (fixed seeds, stable hash = blake2b —
-never Python's salted hash()). The Spark layer wraps these in Arrow-batched
-pandas UDFs (pipeline/textstats.py, pipeline/dedup.py).
+never Python's salted hash()). The Spark layer wraps these in Arrow row
+UDFs (pipeline/textstats.py, pipeline/dedup.py).
 """
 
 from __future__ import annotations
@@ -15,8 +15,6 @@ import numpy as np
 
 _MERSENNE61 = (1 << 61) - 1
 _WORD_RE = re.compile(r"\S+")
-# BPE-ish tokenization: letter runs, digit runs, single punctuation marks.
-BPE_ISH_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
 
 # Minimal per-language stopword markers for n-gram/stopword language ID.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {

@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 
 from .errors import KernelError, check_deadline
 
-TORRENT_MIME = "application/x-bittorrent"
 
 _MAX_VALUES = 100_000
 _MAX_DEPTH = 32

@@ -33,7 +33,6 @@ from dataclasses import dataclass
 from .errors import EncryptedError, KernelError
 
 MAGIC = b"\xffWPC"
-WPD_MIME = "application/vnd.wordperfect"
 
 BODY_REFUSAL = ("WP function-code size tables not available from "
                 "retrieved public content; body decode refused by "

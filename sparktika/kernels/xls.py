@@ -37,7 +37,6 @@ from dataclasses import dataclass, field
 from .errors import KernelError, check_deadline
 from .ole2 import Ole2File
 
-_BOF = 0x0809
 _EOF = 0x000A
 _BOUNDSHEET = 0x0085
 _SST = 0x00FC

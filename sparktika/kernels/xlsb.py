@@ -48,12 +48,9 @@ _BRT_FMLA_BOOL = 0x0A
 _BRT_FMLA_ERROR = 0x0B
 _BRT_SST_ITEM = 0x13
 _BRT_BUNDLE_SH = 0x9C
-_BRT_BEGIN_SST = 0x19F
 
 _ERR_NAMES = {0x00: "#NULL!", 0x07: "#DIV/0!", 0x0F: "#VALUE!",
               0x17: "#REF!", 0x1D: "#NAME?", 0x24: "#NUM!", 0x2A: "#N/A"}
-
-XLSB_MIME = "application/vnd.ms-excel.sheet.binary.macroenabled.12"
 
 
 def iter_records(buf: bytes):

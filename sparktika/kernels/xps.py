@@ -170,9 +170,13 @@ def build_xps(pages: list[list[str]]) -> bytes:
     from xml.sax.saxutils import quoteattr
 
     buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr(
-            "[Content_Types].xml",
+    with zipfile.ZipFile(buf, "w") as zf:
+        def put(name: str, data: str) -> None:
+            # fixed member timestamps: the same pages give the same bytes
+            zf.writestr(zipfile.ZipInfo(name, (1980, 1, 1, 0, 0, 0)), data,
+                        zipfile.ZIP_DEFLATED)
+
+        put("[Content_Types].xml",
             '<?xml version="1.0"?><Types xmlns="http://schemas.openxml'
             'formats.org/package/2006/content-types">'
             '<Default Extension="fdseq" ContentType="application/vnd.ms-'
@@ -181,8 +185,7 @@ def build_xps(pages: list[list[str]]) -> bytes:
             'package.xps-fixeddocument+xml"/>'
             '<Default Extension="fpage" ContentType="application/vnd.ms-'
             'package.xps-fixedpage+xml"/></Types>')
-        zf.writestr(
-            "FixedDocSeq.fdseq",
+        put("FixedDocSeq.fdseq",
             '<?xml version="1.0"?><FixedDocumentSequence xmlns="http://'
             'schemas.microsoft.com/xps/2005/06">'
             '<DocumentReference Source="/Documents/1/FixedDocument.fdoc"/>'
@@ -190,8 +193,7 @@ def build_xps(pages: list[list[str]]) -> bytes:
         pagerefs = "".join(
             f'<PageContent Source="Pages/{i + 1}.fpage"/>'
             for i in range(len(pages)))
-        zf.writestr(
-            "Documents/1/FixedDocument.fdoc",
+        put("Documents/1/FixedDocument.fdoc",
             '<?xml version="1.0"?><FixedDocument xmlns="http://schemas.'
             f'microsoft.com/xps/2005/06">{pagerefs}</FixedDocument>')
         for i, runs in enumerate(pages):
@@ -200,8 +202,7 @@ def build_xps(pages: list[list[str]]) -> bytes:
                 f'FontRenderingEmSize="12" FontUri="/Resources/arial.ttf" '
                 f"UnicodeString={quoteattr(r)}/>"
                 for j, r in enumerate(runs))
-            zf.writestr(
-                f"Documents/1/Pages/{i + 1}.fpage",
+            put(f"Documents/1/Pages/{i + 1}.fpage",
                 '<?xml version="1.0"?><FixedPage xmlns="http://schemas.'
                 'microsoft.com/xps/2005/06" Width="816" Height="1056">'
                 f"{glyphs}</FixedPage>")

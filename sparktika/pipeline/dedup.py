@@ -3,7 +3,7 @@
 Five families (each surfaced as a driver-contract query):
 - exact:        sha256(text) groupBy — one shuffle, map-side combinable
 - normalized:   exact over lower+whitespace-collapsed text
-- minhash LSH:  vectorized signature UDF -> band explode -> bucket
+- minhash LSH:  Arrow row signature UDF -> band explode -> bucket
                 self-join -> signature-agreement verify. No text ever
                 shuffles: the band self-join moves 24B per (doc, band)
                 and signatures rejoin candidates by key (~1KB/doc), so
@@ -54,20 +54,17 @@ def minhash_signatures(
     num_perm: int = 128,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """(key, sig array<bigint>) — Arrow-batched pandas UDF, numpy inside."""
-    from pyspark.sql.functions import pandas_udf
+    """(key, sig array<bigint>) — Arrow row UDF, numpy inside."""
     from pyspark.sql.types import ArrayType, LongType
 
-    def fn(texts: pd.Series) -> pd.Series:
+    def fn(t: str | None) -> list[int]:
         from ..kernels.textstats import minhash_signature
 
-        return pd.Series([
-            minhash_signature(t or "", num_perm=num_perm, k=shingle_k)
-            .astype("int64").tolist()  # uint64 -> int64 bit-reinterp for Spark
-            for t in texts
-        ])
+        # uint64 -> int64 bit-reinterp for Spark
+        return (minhash_signature(t or "", num_perm=num_perm, k=shingle_k)
+                .astype("int64").tolist())
 
-    sig_udf = pandas_udf(fn, ArrayType(LongType()))
+    sig_udf = F.udf(fn, ArrayType(LongType()), useArrow=True)
     return df.select(F.col(key_col).alias("key"), sig_udf(F.col(text_col)).alias("sig"))
 
 
@@ -149,15 +146,14 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------- simhash
 
 def simhash_keys(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    def fn(texts: pd.Series) -> pd.Series:
+    def fn(t: str | None) -> int:
         from ..kernels.textstats import simhash64
 
-        return pd.Series([simhash64(t or "") - (1 << 63) for t in texts])
+        return simhash64(t or "") - (1 << 63)
 
-    udf = pandas_udf(fn, LongType())
+    udf = F.udf(fn, LongType(), useArrow=True)
     return df.select(F.col(key_col).alias("key"), udf(F.col(text_col)).alias("simhash"))
 
 

@@ -39,17 +39,16 @@ into a degenerate hard filter.
 
 Scale posture: the 64-entry table rides an explicit Spark broadcast
 (the pattern that matters at 2**20 buckets); weighting is a map-only
-Arrow-batched pandas_udf and acceptance is pure built-in column
+Arrow row UDF and acceptance is pure built-in column
 arithmetic — one scan, zero shuffles (pinned in test_plan_audits.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .quality_model import N_BUCKETS, _score_texts
+from .quality_model import _score_text
 
 RAMP_HALF = 1 << 19          # acceptance ramp half-width (20-bit draw)
 
@@ -92,18 +91,14 @@ def dsir_weights(df: DataFrame, text_col: str = "text",
                  ratios: list[int] | None = None) -> DataFrame:
     """Append ``weight_scaled`` (long): the summed scaled log importance
     ratio of the document's hashed-bigram features. Table broadcast,
-    map-only pandas_udf — same shape as quality_model.score_quality."""
-    from pyspark.sql.functions import pandas_udf
-
+    map-only Arrow row UDF — same shape as quality_model.score_quality."""
     spark = df.sparkSession
     bw = spark.sparkContext.broadcast(
         np.asarray(ratios if ratios is not None else LOG_RATIO_SCALED,
                    dtype=np.int64))
 
-    @pandas_udf("long")
-    def weight_udf(texts: pd.Series) -> pd.Series:
-        return _score_texts(texts, bw.value, 0)
-
+    weight_udf = F.udf(lambda t: _score_text(t, bw.value, 0), "long",
+                       useArrow=True)
     return df.withColumn("weight_scaled", weight_udf(F.col(text_col)))
 
 

@@ -27,13 +27,6 @@ from pyspark.sql import types as T
 
 from .arrowmap import fit_ints, row_batches
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("media_type", T.StringType()),     # image/jpeg, audio/x-wav, ...
-    T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-])
-
 FEATURES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("media_type", T.StringType()),

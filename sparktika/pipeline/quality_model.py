@@ -22,14 +22,13 @@ re-running the scorer over a held-out id range.
 
 Scale posture: the weight vector rides an explicit Spark broadcast
 (the pattern that matters when D is 2**20, not 64); scoring is a
-map-only Arrow-batched pandas_udf over the text column — one scan,
+map-only Arrow row UDF over the text column — one scan,
 zero shuffles (pinned in tests/test_plan_audits.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 N_BUCKETS = 64
@@ -67,19 +66,14 @@ WEIGHTS_PPM = [
 ]
 
 
-def _score_texts(texts: pd.Series, weights: np.ndarray,
-                 bias: int) -> pd.Series:
-    out = np.empty(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts):
-        toks = [x for x in (t or "").split(" ") if x]
-        if len(toks) < 2:
-            out[i] = bias
-            continue
-        f = np.fromiter((7 * len(x) + ord(x[0]) for x in toks),
-                        dtype=np.int64, count=len(toks))
-        buckets = (f[:-1] * 31 + f[1:]) % N_BUCKETS
-        out[i] = bias + int(weights[buckets].sum())
-    return pd.Series(out)
+def _score_text(text: str | None, weights: np.ndarray, bias: int) -> int:
+    toks = [x for x in (text or "").split(" ") if x]
+    if len(toks) < 2:
+        return bias
+    f = np.fromiter((7 * len(x) + ord(x[0]) for x in toks),
+                    dtype=np.int64, count=len(toks))
+    buckets = (f[:-1] * 31 + f[1:]) % N_BUCKETS
+    return bias + int(weights[buckets].sum())
 
 
 def score_quality(df: DataFrame, text_col: str = "text",
@@ -91,17 +85,13 @@ def score_quality(df: DataFrame, text_col: str = "text",
     with a realistic 2**20-bucket model this is the difference between
     one copy per executor and one per task closure.
     """
-    from pyspark.sql.functions import pandas_udf
-
     spark = df.sparkSession
     bw = spark.sparkContext.broadcast(
         np.asarray(weights if weights is not None else WEIGHTS_PPM,
                    dtype=np.int64))
     b = BIAS_PPM if bias is None else bias
 
-    @pandas_udf("long")
-    def score_udf(texts: pd.Series) -> pd.Series:
-        return _score_texts(texts, bw.value, b)
-
+    score_udf = F.udf(lambda t: _score_text(t, bw.value, b), "long",
+                      useArrow=True)
     return df.withColumn("score_ppm", score_udf(F.col(text_col))) \
              .withColumn("keep", F.col("score_ppm") > 0)

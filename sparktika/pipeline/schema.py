@@ -47,16 +47,3 @@ EXTRACTED_SCHEMA = T.StructType([
     T.StructField("n_chars_out", T.LongType()),
     T.StructField("write_limit_reached", T.BooleanType()),
 ])
-
-METRICS_SCHEMA = T.StructType([
-    T.StructField("run_id", T.StringType()),
-    T.StructField("partition_id", T.IntegerType()),
-    T.StructField("docs_in", T.LongType()),
-    T.StructField("docs_ok", T.LongType()),
-    T.StructField("docs_failed", T.LongType()),
-    T.StructField("bytes_in", T.LongType()),
-    T.StructField("chars_out", T.LongType()),
-    T.StructField("wall_ms", T.LongType()),
-    T.StructField("min_url", T.StringType()),
-    T.StructField("max_url", T.StringType()),
-])

@@ -3,12 +3,11 @@
 Everything here that feeds an oracle-checked query is expressed with
 JVM-side built-ins (split/regexp/length arithmetic) so it stays inside
 whole-stage codegen AND can be mirrored in DuckDB SQL. The winnowing
-fingerprint (inherently procedural) is the one pandas-UDF member.
+fingerprint (inherently procedural) is the one Arrow row UDF member.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 # Marker words per language — shared verbatim with the DuckDB oracle
@@ -96,19 +95,16 @@ def fingerprint_md5_col(text_col) -> "F.Column":
 def winnowing_fingerprints(df: DataFrame, text_col: str = "text",
                            key_col: str = "doc_id") -> DataFrame:
     """(key, fingerprints array<bigint>) via the winnowing kernel."""
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    def fn(texts: pd.Series) -> pd.Series:
+    def fn(t: str | None) -> list[int]:
         from ..kernels.textstats import winnowing_fingerprint
 
-        return pd.Series([
-            [h - (1 << 63) if h >= (1 << 63) else h
-             for h in winnowing_fingerprint(t or "")]
-            for t in texts
-        ])
+        # uint64 -> int64 bit-reinterp, one-to-one (as minhash_signatures)
+        return [h - (1 << 64) if h >= (1 << 63) else h
+                for h in winnowing_fingerprint(t or "")]
 
-    udf = pandas_udf(fn, ArrayType(LongType()))
+    udf = F.udf(fn, ArrayType(LongType()), useArrow=True)
     return df.select(F.col(key_col).alias("key"), udf(F.col(text_col)).alias("fingerprints"))
 
 

@@ -51,13 +51,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _payload(builder: Callable[[int], bytes]):
     """The binary column `builder(doc_id)` over the `doc_id` column."""
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
-    def payload(ids: pd.Series) -> pd.Series:
-        return pd.Series([builder(int(i)) for i in ids])
-
-    return pandas_udf(payload, BinaryType())(F.col("doc_id"))
+    return F.udf(builder, BinaryType(), useArrow=True)(F.col("doc_id"))
 
 
 def _synth_extract(spark: SparkSession, sf_dir: str,
@@ -301,23 +297,21 @@ def extract_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     nav (3 links, 6 anchor words, link density 1 -> always boilerplate)];
     intro is content iff next-block words > 15, content iff its words > 16.
     """
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
-    def fn(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        nav = ('<div><a href="/a">home page</a> <a href="/b">about us</a> '
-               '<a href="/c">contact form</a></div>')
-        return pd.Series([
-            (f"<html><body><div>menu</div><p>{t}</p>{nav}</body></html>").encode()
-            for t in texts
-        ])
+    nav = ('<div><a href="/a">home page</a> <a href="/b">about us</a> '
+           '<a href="/c">contact form</a></div>')
 
-    udf = pandas_udf(fn, BinaryType())
+    def fn(t: str | None) -> bytes:
+        return (f"<html><body><div>menu</div><p>{t}</p>{nav}</body></html>"
+                ).encode()
+
+    udf = F.udf(fn, BinaryType(), useArrow=True)
     pages = (
         _docs(spark, sf_dir)
         .filter(F.col("doc_id") % 10 == 0)
-        .select(F.col("doc_id").cast("string").alias("url"), "doc_id", "text")
-        .withColumn("html", udf("doc_id", "text"))
+        .select(F.col("doc_id").cast("string").alias("url"), "text")
+        .withColumn("html", udf("text"))
     )
     return extract_pages(pages, SYNTH_CONFIG).select(
         "url", F.coalesce(F.col("main_text"), F.lit("")).alias("main_text"))
@@ -332,7 +326,6 @@ def _office_pages(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     import io
     import zipfile
 
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
     def zip_bytes(entries: dict[str, bytes]) -> bytes:
@@ -384,10 +377,7 @@ def _office_pages(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
         return zip_bytes({"a.txt": text.encode(),
                           "b.txt": f" tail of {doc_id}".encode()})
 
-    def fn(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        return pd.Series([build(int(i), t) for i, t in zip(ids, texts)])
-
-    udf = pandas_udf(fn, BinaryType())
+    udf = F.udf(build, BinaryType(), useArrow=True)
     return (
         _docs(spark, sf_dir)
         .filter(F.col("doc_id") % 10 == 0)
@@ -1213,15 +1203,14 @@ def rel_sql_api_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame
 # rows-only: n-gram lang-id uses kernel trigram profiles (pytest-pinned)
 @_register("text_lang_id_ngram")
 def text_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StringType
 
-    def fn(texts: pd.Series) -> pd.Series:
+    def fn(t: str | None) -> str:
         from .kernels.textstats import detect_lang_ngram
 
-        return pd.Series([detect_lang_ngram(t or "") for t in texts])
+        return detect_lang_ngram(t or "")
 
-    udf = pandas_udf(fn, StringType())
+    udf = F.udf(fn, StringType(), useArrow=True)
     return _docs(spark, sf_dir).select("doc_id", udf("text").alias("lang_pred"))
 
 
@@ -1778,7 +1767,6 @@ def web_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     advertised sitemaps. Standalone kernel over the payload (plain
     text, no magic — the crawl layer knows the URL); map-only Arrow
     UDF."""
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (BooleanType, DoubleType, LongType,
                                    StringType, StructField, StructType)
 
@@ -1794,20 +1782,19 @@ def web_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("sitemap", StringType()),
     ])
 
-    def mine(ids: pd.Series) -> pd.DataFrame:
-        rows = []
-        for i in ids:
-            r = parse_robots(build_robots(int(i)).decode())
-            g = r.group_for("*")
-            rows.append((len(r.groups),
-                         len(g.disallows) if g else 0,
-                         len(g.allows) if g else 0,
-                         g.crawl_delay if g else None,
-                         r.disallows_all(),
-                         r.sitemaps[0] if r.sitemaps else None))
-        return pd.DataFrame(rows, columns=[f.name for f in schema])
+    def mine(doc_id: int) -> tuple:
+        r = parse_robots(build_robots(doc_id).decode())
+        g = r.group_for("*")
+        delay = g.crawl_delay if g else None
+        return (len(r.groups),
+                len(g.disallows) if g else 0,
+                len(g.allows) if g else 0,
+                # `Crawl-delay: nan` parses to NaN; it reads as null
+                None if delay != delay else delay,
+                r.disallows_all(),
+                r.sitemaps[0] if r.sitemaps else None)
 
-    udf = pandas_udf(mine, schema)
+    udf = F.udf(mine, schema, useArrow=True)
     docs = _docs(spark, sf_dir)
     return docs.select(
         "doc_id", udf(F.col("doc_id")).alias("r")).select("doc_id", "r.*")
@@ -1922,9 +1909,8 @@ def text_jsonld(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema.org). Standalone scanner over the raw payload (the HTML
     walker discards script bodies by design — invariant 14 stays
     untouched); handles multiple blocks, @graph, nested author
-    objects; unparseable blocks count, never fail. Arrow-batched
-    pandas UDF, map-only — linear at 100 TB."""
-    from pyspark.sql.functions import pandas_udf
+    objects; unparseable blocks count, never fail. Arrow row UDF,
+    map-only — linear at 100 TB."""
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
@@ -1940,20 +1926,16 @@ def text_jsonld(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_bad_blocks", LongType()),
     ])
 
-    def mine(ids: pd.Series) -> pd.DataFrame:
-        rows = []
-        for i in ids:
-            r = extract_jsonld(build_jsonld_page(int(i)).decode())
-            art = next((e for e in r.entities if e["type"] == "Article"),
-                       {})
-            org = next((e for e in r.entities
-                        if e["type"] == "Organization"), {})
-            rows.append((art.get("headline"), art.get("author"),
-                         art.get("datePublished"), org.get("name"),
-                         r.n_blocks, r.n_bad_blocks))
-        return pd.DataFrame(rows, columns=[f.name for f in schema])
+    def mine(doc_id: int) -> tuple:
+        r = extract_jsonld(build_jsonld_page(doc_id).decode())
+        art = next((e for e in r.entities if e["type"] == "Article"), {})
+        org = next((e for e in r.entities if e["type"] == "Organization"),
+                   {})
+        return (art.get("headline"), art.get("author"),
+                art.get("datePublished"), org.get("name"),
+                r.n_blocks, r.n_bad_blocks)
 
-    udf = pandas_udf(mine, schema)
+    udf = F.udf(mine, schema, useArrow=True)
     docs = _docs(spark, sf_dir)
     return docs.select(
         "doc_id", udf(F.col("doc_id")).alias("j")

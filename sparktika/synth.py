@@ -5,8 +5,8 @@ text, lang) per BASELINE.json input_hint — from the driver's `documents`
 parquet, entirely as a function of (doc_id, text). The SAME construction
 is expressed twice and kept in lockstep:
 
-  1. `synth_pages(spark, sf_dir)` — Spark DataFrame (payload bytes via a
-     vectorized pandas UDF; url/ts/skew columns via built-ins)
+  1. `synth_pages(spark, sf_dir)` — Spark DataFrame (payload bytes via an
+     Arrow row UDF; url/ts/skew columns via built-ins)
   2. `PAGES_CTE` — a DuckDB SQL CTE computing the page attributes AND the
      expected extraction results, used as the driver's oracle
 
@@ -34,9 +34,8 @@ from __future__ import annotations
 
 import zlib
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import BinaryType
 
 from .config import ExtractConfig
 
@@ -1367,15 +1366,6 @@ def build_payload(doc_id: int, text: str) -> bytes:
     return ((text + " ") * reps).encode("utf-8")
 
 
-def _payload_udf():
-    from pyspark.sql.types import BinaryType
-
-    def fn(doc_id: pd.Series, text: pd.Series) -> pd.Series:
-        return pd.Series([build_payload(int(d), t) for d, t in zip(doc_id, text)])
-
-    return pandas_udf(fn, BinaryType())
-
-
 def synth_pages(spark: SparkSession, sf_dir: str, with_meta: bool = False) -> DataFrame:
     """The synthetic pages table. with_meta=True keeps doc_id/kind columns
     for tests; the canonical shape is exactly the input_hint's 5 columns."""
@@ -1402,7 +1392,8 @@ def synth_pages(spark: SparkSession, sf_dir: str, with_meta: bool = False) -> Da
             "warc_ts",
             F.expr("timestamp'2026-01-01 00:00:00' + make_interval(0,0,0,0,0,0,doc_id)"),
         )
-        .withColumn("html", _payload_udf()("doc_id", "text"))
+        .withColumn("html", F.udf(build_payload, BinaryType(),
+                                  useArrow=True)("doc_id", "text"))
     )
     cols = ["url", "warc_ts", "html", "text", "lang"]
     if with_meta:
@@ -1438,15 +1429,10 @@ def synth_pages_heavy(
 ) -> DataFrame:
     """Heavy-page variant of synth_pages for throughput benchmarking."""
 
-    def fn(doc_id: pd.Series, text: pd.Series) -> pd.Series:
-        return pd.Series([
-            build_heavy_payload(int(d), t, body_repeat)
-            for d, t in zip(doc_id, text)
-        ])
+    def fn(doc_id: int, text: str) -> bytes:
+        return build_heavy_payload(doc_id, text, body_repeat)
 
-    from pyspark.sql.types import BinaryType
-
-    udf = pandas_udf(fn, BinaryType())
+    udf = F.udf(fn, BinaryType(), useArrow=True)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
         docs.select("doc_id", "text", "lang")
@@ -3397,13 +3383,19 @@ def build_iwork(doc_id: int) -> bytes:
            f'xmlns:sfa="http://developer.apple.com/namespaces/sfa">'
            f'{body}</{root.split(" ")[0]}>').encode()
     gz = v == 0 and doc_id % 2 == 1
+    members = {
+        "buildVersionHistory.plist":
+            b"<plist><array><string>synth</string></array></plist>",
+        idx + (".gz" if gz else ""):
+            _gzip.compress(xml, 6, mtime=0) if gz else xml,
+        "QuickLook/Thumbnail.jpg": b"\xff\xd8\xff\xdb",
+    }
     buf = _io.BytesIO()
-    with _zf.ZipFile(buf, "w", _zf.ZIP_DEFLATED) as z:
-        z.writestr("buildVersionHistory.plist",
-                   "<plist><array><string>synth</string></array></plist>")
-        z.writestr(idx + (".gz" if gz else ""),
-                   _gzip.compress(xml, 6, mtime=0) if gz else xml)
-        z.writestr("QuickLook/Thumbnail.jpg", b"\xff\xd8\xff\xdb")
+    with _zf.ZipFile(buf, "w") as z:
+        for name, data in members.items():
+            # fixed member timestamps: the same doc_id gives the same bytes
+            z.writestr(_zf.ZipInfo(name, (1980, 1, 1, 0, 0, 0)), data,
+                       _zf.ZIP_DEFLATED)
     return buf.getvalue()
 
 

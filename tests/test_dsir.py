@@ -10,7 +10,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from sparktika.pipeline.dsir import (
@@ -20,7 +19,7 @@ from sparktika.pipeline.dsir import (
     dsir_resample,
     dsir_weights,
 )
-from sparktika.pipeline.quality_model import N_BUCKETS, _score_texts
+from sparktika.pipeline.quality_model import N_BUCKETS, _score_text
 
 SF = "/root/testdata/sf0.001"
 
@@ -53,10 +52,9 @@ def spark():
 def test_table_shape_and_scorer_reuse():
     assert len(LOG_RATIO_SCALED) == N_BUCKETS
     texts = [dsir_page_text(i) for i in range(30)] + ["", "one", "a  b"]
-    got = _score_texts(pd.Series(texts),
-                       np.asarray(LOG_RATIO_SCALED, dtype=np.int64), 0)
-    for t, w in zip(texts, got):
-        assert int(w) == py_weight(t), t
+    ratios = np.asarray(LOG_RATIO_SCALED, dtype=np.int64)
+    for t in texts:
+        assert _score_text(t, ratios, 0) == py_weight(t), t
 
 
 def test_ramp_is_exercised_per_kind():

@@ -82,3 +82,16 @@ def test_fuzz_never_raises():
         rr = extract_document("https://x/a.numbers", None, bytes(data))
         assert rr.status in ("ok", "failed", "unsupported", "truncated")
         data[i] = orig
+
+
+def test_build_bytes_do_not_depend_on_the_clock(monkeypatch):
+    """Zip members carry a fixed timestamp, so one doc_id always builds
+    the same bytes; members stay deflated."""
+    import time
+
+    monkeypatch.setattr(time, "time", lambda: 1_000_000_000.0)
+    first = build_iwork(3)
+    monkeypatch.setattr(time, "time", lambda: 1_700_000_000.0)
+    assert build_iwork(3) == first
+    infos = zipfile.ZipFile(io.BytesIO(first)).infolist()
+    assert {i.compress_type for i in infos} == {zipfile.ZIP_DEFLATED}

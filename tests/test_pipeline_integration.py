@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparktika.config import ExtractConfig
-from sparktika.pipeline import dedup, metrics, resume, similarity
+from sparktika.pipeline import dedup, metrics, resume, similarity, textstats
 from sparktika.pipeline.extract import extract_pages
 from sparktika.synth import SYNTH_CONFIG, synth_pages
 
@@ -303,6 +303,21 @@ def test_simhash_planted_exact_dups(spark):
     found = {(r.key_a, r.key_b): r.hamming for r in pairs}
     for k in range(0, 100, 5):
         assert found.get((k, k + 1000)) == 0
+
+
+def test_winnowing_short_text_hash_maps_one_to_one(spark):
+    """A text under k=8 chars is fingerprinted by one stable_hash64; a
+    hash >= 2**63 must come out bit-reinterpreted (h - 2**64), not with
+    its top bit cleared, which could equal a real hash below 2**63."""
+    from sparktika.kernels.textstats import stable_hash64
+
+    high, low = stable_hash64(b"abc"), stable_hash64(b"short")
+    assert high >= 1 << 63 > low
+    df = spark.createDataFrame([(1, "abc"), (2, "short")],
+                               "doc_id long, text string")
+    got = {r.key: r.fingerprints
+           for r in textstats.winnowing_fingerprints(df).collect()}
+    assert got == {1: [high - (1 << 64)], 2: [low]}
 
 
 def test_simhash_hot_bucket_cap_survives_skew(spark):

@@ -13,7 +13,7 @@ from sparktika.pipeline.quality_model import (
     BIAS_PPM,
     N_BUCKETS,
     WEIGHTS_PPM,
-    _score_texts,
+    _score_text,
     quality_page_text,
     score_quality,
 )
@@ -50,25 +50,20 @@ def test_held_out_accuracy_is_perfect():
     """Ids 200000..200999 were never seen by the trainer (it fit on
     100000..119999); keep must equal the planted good/spam parity."""
     ids = range(200_000, 201_000)
-    texts = [quality_page_text(i) for i in ids]
-    scores = _score_texts(
-        __import__("pandas").Series(texts),
-        np.asarray(WEIGHTS_PPM, dtype=np.int64), BIAS_PPM)
-    for i, s in zip(ids, scores):
+    weights = np.asarray(WEIGHTS_PPM, dtype=np.int64)
+    for i in ids:
+        s = _score_text(quality_page_text(i), weights, BIAS_PPM)
         assert (s > 0) == (i % 2 == 0), (i, s)
 
 
 def test_scorer_matches_reference_arithmetic():
-    """_score_texts agrees with the spelled-out integer formula on the
+    """_score_text agrees with the spelled-out integer formula on the
     twin corpus plus edge cases (empty, single-token, multi-space)."""
-    import pandas as pd
-
     texts = [quality_page_text(i) for i in range(40)] + [
         "", "one", "a  b", "  leading and trailing  "]
-    got = _score_texts(pd.Series(texts),
-                       np.asarray(WEIGHTS_PPM, dtype=np.int64), BIAS_PPM)
-    for t, s in zip(texts, got):
-        assert int(s) == py_score(t), t
+    weights = np.asarray(WEIGHTS_PPM, dtype=np.int64)
+    for t in texts:
+        assert _score_text(t, weights, BIAS_PPM) == py_score(t), t
 
 
 def test_spark_corpus_twin_lockstep(spark):

@@ -104,3 +104,17 @@ def test_exact_fit_page_not_truncated():
     # exact fit followed by a nonempty page also truncates
     r3 = extract_xps(build_xps([["abcde"], ["x"]]), max_chars=5)
     assert r3.truncated
+
+
+def test_build_bytes_do_not_depend_on_the_clock(monkeypatch):
+    """Zip members carry a fixed timestamp, so the same pages always build
+    the same bytes; members stay deflated."""
+    import time
+
+    pages = [["a", "b"], ["c"]]
+    monkeypatch.setattr(time, "time", lambda: 1_000_000_000.0)
+    first = build_xps(pages)
+    monkeypatch.setattr(time, "time", lambda: 1_700_000_000.0)
+    assert build_xps(pages) == first
+    infos = zipfile.ZipFile(io.BytesIO(first)).infolist()
+    assert {i.compress_type for i in infos} == {zipfile.ZIP_DEFLATED}
