@@ -13,6 +13,12 @@ Layout:
              arrowmap.py), dedup, similarity search, text stats,
              metrics, resume, IO
   synth.py   deterministic synthetic `pages` corpus (no external data)
+  zipreread.py  warm reused Python workers (installed at import)
 """
 
+from .zipreread import reread_zips_only_when_changed
+
 __version__ = "0.1.0"
+
+# every Python worker that runs sparktika code imports this package first
+reread_zips_only_when_changed()

@@ -27,6 +27,27 @@ reference's SAX pipeline:
 
 Additionally segments body text into blocks with word/anchor-word counts
 for boilerplate classification (kernels/boilerplate.py).
+
+The walk is one loop over `<` tokens, with no event generator. `_LT`
+finds the next `<` and classifies it in one match: an end tag's name; a
+start tag's name plus the rest of the tag through its `>` or `/>`
+(`_TAG_REST`); or neither, for a comment, CDATA, declaration, PI or
+literal `<` (`_markup`). The text before each `<` is one chunk, because
+chunks decide `body_started` and which whitespace is dropped, and each
+`<` is one deadline tick. Attribute dicts are built only where they are
+read: link elements when `extract_links` is on and <meta> when
+`meta_tags` is on; every other tag's attributes are skipped inside the
+`_LT` match. One name -> bit-flags table (`_FLAGS`) replaces a set
+lookup per rule. Body text, a well-nested end tag and `<a>` are inlined
+in the loop; the rare paths (<p> auto-close, mis-nested close, other
+link kinds, title/head/body) stay in helpers. `scan_html_meta` shares
+`_LT`, `_attrs` and `_markup`, so both walkers have one definition of a
+tag boundary. The output is pinned by tests/test_html_walk_golden.py.
+Measured on a 4-vCPU host, CPU time, one core, 200 perfbench
+`html_extract` pages (~7.2 KB each) with production flags, 30
+alternating in-process reps against the generator-based walker it
+replaced: 488 -> 362 us/doc (min), median pair ratio 0.77; the whole
+`make_extract_fn` row body over 400 such pages 610 -> 513 us/doc.
 """
 
 from __future__ import annotations
@@ -102,11 +123,100 @@ BLOCK_ELEMENTS = {
     "dd", "figure", "figcaption", "summary", "details", "body",
 }
 
+# One name -> bit-flags table for the sets above: one dict lookup per tag
+# instead of one set lookup per rule.
+_SEP = 1          # the writer separates it (textout.TextWriter: span/div)
+_DISCARD = 2
+_VOID = 4
+_HEAD = 8         # may appear before <body> without opening it
+_LINK = 16        # opens a link builder (script never does: discarded)
+_ENDLINE = 32
+_P_CLOSE = 64
+_BLOCK = 128
+_SPECIAL = 256    # html/head/body/title: scoping before the stack
+_A = 512
+_META = 1024
+
+
+def _flag_table() -> dict[str, int]:
+    rules = [
+        (_SEP, SAFE_ELEMENTS & {"span", "div"}),
+        (_DISCARD, DISCARD_ELEMENTS), (_VOID, VOID_ELEMENTS),
+        (_HEAD, _HEAD_SCOPE), (_LINK, LINK_ELEMENTS - DISCARD_ELEMENTS),
+        (_ENDLINE, ENDLINE_ELEMENTS), (_P_CLOSE, _P_CLOSERS),
+        (_BLOCK, BLOCK_ELEMENTS), (_SPECIAL, {"html", "head", "body", "title"}),
+        (_A, {"a"}), (_META, {"meta"}),
+    ]
+    table: dict[str, int] = {}
+    for bit, names in rules:
+        for name in names:
+            table[name] = table.get(name, 0) | bit
+    return table
+
+
+_FLAGS = _flag_table()
+# (name, flags) for a tag name already in lower case: the walker skips
+# str.lower and a second lookup for the common spelling
+_TAG_INFO = {k: (k, v) for k, v in _FLAGS.items()}
+
 _WS_COLLAPSE = re.compile(r"\s+")
-_TAGNAME = re.compile(r"[a-zA-Z][a-zA-Z0-9:-]*")
+_NAME = r"[a-zA-Z][a-zA-Z0-9:-]*"
 _ATTR = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
 )
+# The rest of a start tag after its name, the one definition of where a
+# tag ends: repeatedly whitespace, one _ATTR match (a quoted value may
+# hold `>`), or any other single character, up to `>` or `/>` (its own
+# group), or the end of the input.
+_TAG_REST = r"(?:[ \t\r\n\x0c]+|" + _ATTR.pattern + r"|[^>/]|/(?!>))*(/?>)?"
+# The walk's one tokenizer, shared by both walkers: one match per `<`.
+# Group 1 is an end tag's name; group 2 a start tag's, whose match runs
+# through _TAG_REST (group 5 is its `>`/`/>`, None at the end of the
+# input); neither for a comment, CDATA, declaration, PI or literal `<`.
+_LT = re.compile(rf"<(?:/({_NAME})|({_NAME}){_TAG_REST}|)")
+
+_RAW_CLOSE = {
+    "script": re.compile(r"</script\s*>", re.IGNORECASE),
+    "style": re.compile(r"</style\s*>", re.IGNORECASE),
+}
+
+
+def _attrs(s: str, j: int, k: int) -> dict[str, str]:
+    """Attribute dict of the start tag whose `_TAG_REST` span is s[j:k]:
+    first occurrence of a (lower-cased) name wins, quotes stripped,
+    entities decoded. The _ATTR matches in that span are the ones
+    _TAG_REST consumed (neither `>` nor `/` starts one)."""
+    attrs: dict[str, str] = {}
+    for am in _ATTR.finditer(s, j, k):
+        aname = am.group(1).lower()
+        if aname not in attrs:
+            aval = am.group(2)
+            if aval is None:
+                aval = ""
+            elif aval[:1] in "\"'":
+                aval = aval[1:-1]
+            attrs[aname] = decode_entities(aval)
+    return attrs
+
+
+def _markup(s: str, lt: int) -> tuple[int, str | None]:
+    """A `<` that opens no tag: (where the walk resumes, text it yields).
+    Comments, declarations (doctype) and processing instructions yield
+    nothing; CDATA yields its content; anything else is a literal `<`."""
+    n = len(s)
+    if s.startswith("<!", lt):
+        if s.startswith("<!--", lt):
+            end = s.find("-->", lt + 4)
+            return (n if end == -1 else end + 3), None
+        if s.startswith("<![CDATA[", lt):
+            end = s.find("]]>", lt + 9)
+            if end == -1:
+                return n, s[lt + 9:]
+            return end + 3, s[lt + 9: end]
+    elif not s.startswith("<?", lt):
+        return lt + 1, "<"
+    end = s.find(">", lt + 1)
+    return (n if end == -1 else end + 1), None
 
 
 # --- results ----------------------------------------------------------------
@@ -154,136 +264,73 @@ class _LinkBuilder:
 
     __slots__ = ("type", "uri", "title", "rel", "text", "params")
 
-    def __init__(self, type_: str):
+    def __init__(self, type_: str, uri=None, title=None, rel=None):
         self.type = type_
-        self.uri = ""
-        self.title = ""
-        self.rel = ""
+        self.uri = uri or ""
+        self.title = title or ""
+        self.rel = rel or ""
         self.text: list[str] = []
         self.params: dict[str, str] = {}
-
-    def set_uri(self, v):  self.uri = v or ""
-    def set_title(self, v): self.title = v or ""
-    def set_rel(self, v):   self.rel = v or ""
 
     def set_param(self, k, v):
         if v is not None:
             self.params[k] = v
 
-    def characters(self, s: str):
-        self.text.append(s)
-
     def build(self, base_uri: str) -> Link:
-        # whitespace collapsed, as the reference does (TikaForkMain.java:50)
-        anchor = _WS_COLLAPSE.sub(" ", "".join(self.text)).strip()
+        # whitespace collapsed, as the reference does (TikaForkMain.java:50):
+        # split() splits on the same whitespace class as \s+, so this is
+        # _WS_COLLAPSE.sub(" ", raw).strip() in one pass
+        anchor = " ".join("".join(self.text).split())
         return Link(self.type, base_uri, self.uri, self.title, anchor,
                     self.rel, self.params)
 
 
-# --- tokenizer ---------------------------------------------------------------
+def _link_builder(name: str, attrs: dict[str, str]) -> _LinkBuilder | None:
+    """Per-kind attribute mapping (ref: TikaLinkContentHandler.java:71-179)
+    for every link kind but `a`, which the walker builds inline; None when
+    the element opens no link (a non-image input, a non-GET form)."""
+    get = attrs.get
+    if name == "img":
+        b = _LinkBuilder("img", get("src"), get("title"), get("rel"))
+        b.set_param("alt", get("alt"))
+    elif name == "input":
+        if (get("type") or "").lower() != "image":
+            return None
+        b = _LinkBuilder("input", get("src"), get("name"))
+        b.set_param("alt", get("alt"))
+    elif name == "link":
+        b = _LinkBuilder("link", get("href"), get("title"), get("rel"))
+        b.set_param("type", get("type"))
+    elif name == "form":
+        method = get("method")
+        if method is not None and method.lower() != "get":
+            return None
+        b = _LinkBuilder("form", get("action"), get("name"))
+        b.set_param("target", get("target"))
+    elif name == "embed":
+        b = _LinkBuilder("embed", get("src"), get("name"))
+        b.set_param("type", get("type"))
+        b.set_param("height", get("height")); b.set_param("width", get("width"))
+    elif name == "source":
+        b = _LinkBuilder("source", get("src"))
+        b.set_param("type", get("type")); b.set_param("media", get("media"))
+    elif name == "track":
+        b = _LinkBuilder("track", get("src"), get("label"))
+        b.set_param("kind", get("kind")); b.set_param("srclang", get("srclang"))
+    elif name == "object":
+        b = _LinkBuilder("object", get("data"))
+        b.set_param("type", get("type"))
+        b.set_param("height", get("height")); b.set_param("width", get("width"))
+    elif name in ("frame", "iframe"):
+        b = _LinkBuilder(name, get("src"), get("name"))
+    else:  # area
+        b = _LinkBuilder("area", get("href"))
+        b.set_param("shape", get("shape")); b.set_param("coords", get("coords"))
+        b.set_param("alt", get("alt"))
+    return b
 
-_RAW_CLOSE = {
-    "script": re.compile(r"</script\s*>", re.IGNORECASE),
-    "style": re.compile(r"</style\s*>", re.IGNORECASE),
-}
 
-
-def tokenize(s: str, deadline: float | None = None):
-    """Yield lenient HTML events:
-    ('text', str) | ('start', name, attrs, self_closing) | ('end', name)
-    Comments, doctype, CDATA and processing instructions are dropped.
-    script/style contents are consumed raw (no tag parsing inside).
-    """
-    i, n = 0, len(s)
-    tick = 0
-    while i < n:
-        tick += 1
-        if deadline is not None and (tick & 0xFF) == 0 and time.monotonic() > deadline:
-            raise DeadlineError("html parse deadline exceeded")
-        lt = s.find("<", i)
-        if lt == -1:
-            yield ("text", s[i:])
-            break
-        if lt > i:
-            yield ("text", s[i:lt])
-        if lt + 1 >= n:
-            yield ("text", s[lt:])
-            break
-        c = s[lt + 1]
-        if c == "!":
-            if s.startswith("<!--", lt):
-                end = s.find("-->", lt + 4)
-                i = n if end == -1 else end + 3
-            elif s.startswith("<![CDATA[", lt):
-                end = s.find("]]>", lt + 9)
-                if end == -1:
-                    yield ("text", s[lt + 9:])
-                    i = n
-                else:
-                    yield ("text", s[lt + 9: end])
-                    i = end + 3
-            else:  # doctype or bogus declaration
-                end = s.find(">", lt + 1)
-                i = n if end == -1 else end + 1
-            continue
-        if c == "?":  # processing instruction
-            end = s.find(">", lt + 1)
-            i = n if end == -1 else end + 1
-            continue
-        if c == "/":
-            m = _TAGNAME.match(s, lt + 2)
-            end = s.find(">", lt + 1)
-            if m and end != -1:
-                yield ("end", m.group(0).lower())
-                i = end + 1
-            else:
-                yield ("text", "<")
-                i = lt + 1
-            continue
-        m = _TAGNAME.match(s, lt + 1)
-        if not m:
-            yield ("text", "<")
-            i = lt + 1
-            continue
-        name = m.group(0).lower()
-        j = m.end()
-        attrs: dict[str, str] = {}
-        self_closing = False
-        while j < n:
-            ch = s[j]
-            if ch == ">":
-                j += 1
-                break
-            if ch == "/" and j + 1 < n and s[j + 1] == ">":
-                self_closing = True
-                j += 2
-                break
-            if ch in " \t\r\n\x0c":
-                j += 1
-                continue
-            am = _ATTR.match(s, j)
-            if not am:
-                j += 1
-                continue
-            aname = am.group(1).lower()
-            aval = am.group(2)
-            if aval is None:
-                aval = ""
-            elif aval[:1] in "\"'":
-                aval = aval[1:-1]
-            if aname not in attrs:
-                attrs[aname] = decode_entities(aval)
-            j = am.end()
-        yield ("start", name, attrs, self_closing)
-        i = j
-        if name in ("script", "style") and not self_closing:
-            cm = _RAW_CLOSE[name].search(s, i)
-            if cm:
-                i = cm.end()
-            else:
-                i = n
-            yield ("end", name)
-
+# --- structure-only scanner ---------------------------------------------------
 
 def scan_html_meta(
     s: str,
@@ -293,18 +340,15 @@ def scan_html_meta(
 ) -> HtmlResult:
     """Structure-only walk for the metadata-only fast path (O26): title,
     depth guard, and deadline — no text assembly, no links, no blocks, no
-    event generator, no attribute materialization.
+    attribute materialization (except <meta> when meta_tags is on).
 
     Byte-equivalent observables with the full walker (status/exception,
-    title) by construction: identical tag-boundary rules (same _TAGNAME /
-    _ATTR consumption, comment/CDATA/doctype/PI handling, script/style raw
-    skip) and identical stack semantics (void elements, self-closing,
-    <p> auto-close, TagSoup pop-until-match, head/body/title scoping).
-    Pinned by the differential fuzz test in tests/test_fuzz.py.
-
-    ~3x faster than driving the event walker with null sinks: the
-    per-event generator suspend/resume and attr dict assembly dominate
-    the lean path's cost (measured on the bench heavy-page corpus).
+    title, meta) by construction: the same `<` classifier (_LT), tag end
+    (_TAG_REST), markup handling (_markup), script/style raw skip and
+    deadline tick per `<`, and the same stack semantics (void elements,
+    self-closing, <p> auto-close, TagSoup pop-until-match,
+    head/body/title scoping). Pinned by the differential fuzz test in
+    tests/test_fuzz.py and tests/test_html_walk_golden.py.
     """
     stack: list[str] = []
     title_parts: list[str] = []
@@ -332,44 +376,24 @@ def scan_html_meta(
         tick += 1
         if deadline is not None and (tick & 0xFF) == 0 and time.monotonic() > deadline:
             raise DeadlineError("html parse deadline exceeded")
-        lt = s.find("<", i)
-        if lt == -1:
+        m = _LT.search(s, i)
+        if m is None:
             if in_title or not body_started:
                 text_span(s[i:])
             break
+        lt = m.start()
         if lt > i and (in_title or not body_started):
             text_span(s[i:lt])
-        if lt + 1 >= n:
-            if in_title or not body_started:
-                text_span(s[lt:])
-            break
-        c = s[lt + 1]
-        if c == "!":
-            if s.startswith("<!--", lt):
-                end = s.find("-->", lt + 4)
-                i = n if end == -1 else end + 3
-            elif s.startswith("<![CDATA[", lt):
-                end = s.find("]]>", lt + 9)
-                if in_title or not body_started:
-                    text_span(s[lt + 9:] if end == -1 else s[lt + 9: end])
-                i = n if end == -1 else end + 3
-            else:  # doctype or bogus declaration
-                end = s.find(">", lt + 1)
-                i = n if end == -1 else end + 1
-            continue
-        if c == "?":  # processing instruction
-            end = s.find(">", lt + 1)
-            i = n if end == -1 else end + 1
-            continue
-        if c == "/":
-            m = _TAGNAME.match(s, lt + 2)
-            end = s.find(">", lt + 1)
-            if not m or end == -1:
-                if in_title or not body_started:
-                    text_span("<")
-                i = lt + 1
+        end_name, name, _, _, close = m.groups()
+        if name is None:
+            name = end_name
+            end = -1 if name is None else s.find(">", m.end())
+            if end == -1:
+                i, span = _markup(s, lt)
+                if span is not None and (in_title or not body_started):
+                    text_span(span)
                 continue
-            name = m.group(0).lower()
+            name = name.lower()
             i = end + 1
             if name == "title":
                 in_title = False
@@ -384,74 +408,38 @@ def scan_html_meta(
                     if stack.pop() == name:
                         break
             continue
-        m = _TAGNAME.match(s, lt + 1)
-        if not m:
-            if in_title or not body_started:
-                text_span("<")
-            i = lt + 1
-            continue
-        name = m.group(0).lower()
-        j = m.end()
-        self_closing = False
-        # attrs are extracted ONLY for <meta> when meta_tags is on —
-        # the lean path's speed comes from skipping attr materialization
-        # (including this dict: allocated solely when needed)
-        want_attrs = meta_tags and name == "meta"
-        attrs: dict[str, str] | None = {} if want_attrs else None
-        while j < n:
-            ch = s[j]
-            if ch == ">":
-                j += 1
-                break
-            if ch == "/" and j + 1 < n and s[j + 1] == ">":
-                self_closing = True
-                j += 2
-                break
-            if ch in " \t\r\n\x0c":
-                j += 1
-                continue
-            am = _ATTR.match(s, j)
-            if not am:
-                j += 1
-                continue
-            if want_attrs:
-                aname = am.group(1).lower()
-                aval = am.group(2)
-                if aval is None:
-                    aval = ""
-                elif aval[:1] in "\"'":
-                    aval = aval[1:-1]
-                if aname not in attrs:
-                    attrs[aname] = decode_entities(aval)
-            j = am.end()
-        i = j
-        if want_attrs:
+        name = name.lower()
+        f = _FLAGS.get(name, 0)
+        i = m.end()
+        self_closing = close == "/>"
+        if meta_tags and f & _META:
+            attrs = _attrs(s, m.end(2), i)
             mname = attrs.get("name")
             if mname and "content" in attrs and mname not in meta:
                 meta[mname] = attrs["content"]
-        if name == "html":
-            continue
-        if name == "head":
-            in_head = True
-            continue
-        if name == "body":
-            body_started = True
-            in_head = False
-            continue
-        if name == "title" and not body_started:
-            in_title = True
-            continue
-        if name in DISCARD_ELEMENTS:
+        if f & _SPECIAL:
+            if name == "html":
+                continue
+            if name == "head":
+                in_head = True
+                continue
+            if name == "body":
+                body_started = True
+                in_head = False
+                continue
+            if not body_started:  # title
+                in_title = True
+                continue
+        if f & _DISCARD:
             if not self_closing:
                 cm = _RAW_CLOSE[name].search(s, i)
                 i = cm.end() if cm else n
             continue
-        if not body_started and not in_head and name not in _HEAD_SCOPE:
+        if not body_started and not in_head and not f & _HEAD:
             body_started = True
-        is_void = name in VOID_ELEMENTS or self_closing
-        if stack and stack[-1] == "p" and name in _P_CLOSERS:
+        if f & _P_CLOSE and stack and stack[-1] == "p":
             stack.pop()
-        if not is_void:
+        if not (f & _VOID or self_closing):
             stack.append(name)
             if len(stack) > max_depth:
                 raise DepthLimitError(
@@ -498,18 +486,22 @@ def parse_html(
     if not emit_text and not extract_links and not collect_blocks:
         return scan_html_meta(text, max_depth=max_depth, deadline=deadline,
                               meta_tags=meta_tags)
+    s = text
+    n = len(s)
     writer = TextWriter(max_chars) if emit_text else _NullWriter()
+    write = writer.characters
     meta: dict[str, str] = {}
     links: list[Link] = []
-    builder_stack: list[_LinkBuilder] = []
+    builders: list[_LinkBuilder] = []  # innermost open link last
     stack: list[str] = []
     title_parts: list[str] = []
-    in_head = False
-    in_title = False
-    body_started = False
-    body_done = False
+    in_head = in_title = body_started = body_done = False
     a_depth = 0
     limit_hit = False
+    # body text has a consumer besides open link builders
+    want_text = emit_text or collect_blocks
+    # start tags whose attributes are read
+    attr_flags = (_LINK if extract_links else 0) | (_META if meta_tags else 0)
 
     # block segmentation state
     blocks: list[Block] = []
@@ -518,10 +510,8 @@ def parse_html(
     blk_tag = "body"
 
     def flush_block(tag_for_next: str):
+        """Close the current block (it has text parts) and open the next."""
         nonlocal blk_parts, blk_anchor_parts, blk_tag
-        if not blk_parts:  # common case: structural tags with no text between
-            blk_tag = tag_for_next
-            return
         # " ".join(split()) == _WS_COLLAPSE.sub(" ", raw).strip() — same
         # whitespace class, one pass, and the word list is reused for counts
         words = "".join(blk_parts).split()
@@ -529,10 +519,9 @@ def parse_html(
             textv = " ".join(words)
             n_chars = len(textv)
             n_words = len(words)
-            anchor_raw = "".join(blk_anchor_parts)
             anchor_chars = min(
-                len(" ".join(anchor_raw.split())) if anchor_raw else 0,
-                n_chars)
+                len(" ".join("".join(blk_anchor_parts).split())),
+                n_chars) if blk_anchor_parts else 0
             # approximate anchor words by character share of collapsed text
             n_anchor_words = round(n_words * (anchor_chars / n_chars)) if n_chars else 0
             blocks.append(Block(textv, n_words, n_anchor_words, n_chars,
@@ -541,119 +530,57 @@ def parse_html(
         blk_anchor_parts = []
         blk_tag = tag_for_next
 
-    def emit_chars(chunk: str, to_writer: bool = True):
-        """Send characters to writer + link builders (mirrors the SAX tee)."""
-        nonlocal limit_hit
-        for b in builder_stack:
-            b.characters(chunk)
-        if collect_blocks and to_writer:
+    def emit(chunk: str):
+        """Send characters to link builders, block and writer (the SAX tee);
+        the body-text path in the loop below is this, inlined."""
+        for b in builders:
+            b.text.append(chunk)
+        if collect_blocks:
             blk_parts.append(chunk)
             if a_depth > 0:
                 blk_anchor_parts.append(chunk)
-        if to_writer:
-            writer.characters(chunk)
+        write(chunk)
 
-    def handle_link_start(name: str, attrs: dict[str, str]):
-        """Per-kind attribute mapping (ref: TikaLinkContentHandler.java:71-179)."""
-        get = attrs.get
-        if name == "a":
-            b = _LinkBuilder("a")
-            b.set_uri(get("href")); b.set_title(get("title")); b.set_rel(get("rel"))
-            b.set_param("id", get("id"))
-            builder_stack.insert(0, b)
-        elif name == "img":
-            b = _LinkBuilder("img")
-            b.set_uri(get("src")); b.set_title(get("title")); b.set_rel(get("rel"))
-            b.set_param("alt", get("alt"))
-            builder_stack.insert(0, b)
-            alt = get("alt")
-            if alt is not None:
-                for bb in builder_stack:
-                    bb.characters(alt)
-        elif name == "input":
-            if (get("type") or "").lower() != "image":
-                return False
-            b = _LinkBuilder("input")
-            b.set_uri(get("src")); b.set_title(get("name"))
-            b.set_param("alt", get("alt"))
-            builder_stack.insert(0, b)
-            alt = get("alt")
-            if alt is not None:
-                for bb in builder_stack:
-                    bb.characters(alt)
-        elif name == "link":
-            b = _LinkBuilder("link")
-            b.set_uri(get("href")); b.set_title(get("title")); b.set_rel(get("rel"))
-            b.set_param("type", get("type"))
-            builder_stack.insert(0, b)
-        elif name == "form":
-            method = get("method")
-            if method is not None and method.lower() != "get":
-                return False
-            b = _LinkBuilder("form")
-            b.set_uri(get("action")); b.set_title(get("name"))
-            b.set_param("target", get("target"))
-            builder_stack.insert(0, b)
-        elif name == "embed":
-            b = _LinkBuilder("embed")
-            b.set_uri(get("src")); b.set_title(get("name"))
-            b.set_param("type", get("type"))
-            b.set_param("height", get("height")); b.set_param("width", get("width"))
-            builder_stack.insert(0, b)
-        elif name == "source":
-            b = _LinkBuilder("source")
-            b.set_uri(get("src"))
-            b.set_param("type", get("type")); b.set_param("media", get("media"))
-            builder_stack.insert(0, b)
-        elif name == "track":
-            b = _LinkBuilder("track")
-            b.set_uri(get("src")); b.set_title(get("label"))
-            b.set_param("kind", get("kind")); b.set_param("srclang", get("srclang"))
-            builder_stack.insert(0, b)
-        elif name == "object":
-            b = _LinkBuilder("object")
-            b.set_uri(get("data"))
-            b.set_param("type", get("type"))
-            b.set_param("height", get("height")); b.set_param("width", get("width"))
-            builder_stack.insert(0, b)
-        elif name in ("frame", "iframe"):
-            b = _LinkBuilder(name)
-            b.set_uri(get("src")); b.set_title(get("name"))
-            builder_stack.insert(0, b)
-        elif name == "area":
-            b = _LinkBuilder("area")
-            b.set_uri(get("href"))
-            b.set_param("shape", get("shape")); b.set_param("coords", get("coords"))
-            b.set_param("alt", get("alt"))
-            # quirk preserved: alt chars are emitted BEFORE the push in the
-            # reference (:160-171), so only ENCLOSING links receive them
-            alt = get("alt")
-            if alt is not None:
-                for bb in builder_stack:
-                    bb.characters(alt)
-            builder_stack.insert(0, b)
+    def text_event(raw: str):
+        nonlocal body_started
+        if in_title:
+            title_parts.append(decode_entities(raw))
+            return
+        if body_done:
+            return
+        if body_started:
+            # meta-only: body text with no consumer skips decoding too
+            if not (want_text or builders):
+                return
+            chunk = decode_entities(raw)
         else:
-            return False
-        return True
-
-    def handle_link_end(name: str):
-        if builder_stack:
-            links.append(builder_stack.pop(0).build(base_uri))
+            if in_head:
+                return
+            chunk = decode_entities(raw)
+            if not chunk.strip():
+                return
+            body_started = True
+        emit(chunk)
 
     def end_effects(name: str):
-        """Effects of one endElement event (explicit or synthesized)."""
-        nonlocal a_depth
-        if name == "a":
-            a_depth = max(0, a_depth - 1)
+        """Effects of one endElement event (explicit or synthesized); the
+        well-nested end tag in the loop below is this, inlined."""
+        nonlocal a_depth, blk_tag
+        f = _FLAGS.get(name, 0)
+        if f & _A and a_depth:
+            a_depth -= 1
         if body_started and not body_done:
-            if collect_blocks and name in BLOCK_ELEMENTS:
-                flush_block(name)
-            if name in SAFE_ELEMENTS:
+            if f & _BLOCK and collect_blocks:
+                if blk_parts:
+                    flush_block(name)
+                else:
+                    blk_tag = name
+            if f & _SEP:
                 writer.end_element(name)
-            if name in ENDLINE_ELEMENTS:
-                emit_chars("\n")
-            if extract_links and name in LINK_ELEMENTS and name not in DISCARD_ELEMENTS:
-                handle_link_end(name)
+            if f & _ENDLINE:
+                emit("\n")
+            if f & _LINK and extract_links and builders:
+                links.append(builders.pop().build(base_uri))
 
     def close_element(name: str):
         """Close `name`, synthesizing end events for any elements left open
@@ -683,29 +610,82 @@ def parse_html(
         while stack:
             end_effects(stack.pop())
 
+    i = 0
+    tick = 0
+    search = _LT.search
+    flags = _FLAGS.get
+    tag_info = _TAG_INFO.get
     try:
-        for ev in tokenize(text, deadline=deadline):
-            kind = ev[0]
-            if kind == "text":
-                # meta-only fast path: body text with no consumer (no writer,
-                # no blocks, no open link builders) skips entity decoding too
-                if (not emit_text and not in_title and body_started
-                        and not body_done and not collect_blocks
-                        and not builder_stack):
+        while i < n:
+            tick += 1
+            if deadline is not None and (tick & 0xFF) == 0 and time.monotonic() > deadline:
+                raise DeadlineError("html parse deadline exceeded")
+            m = search(s, i)
+            if m is None:
+                text_event(s[i:])
+                break
+            lt = m.start()
+            if lt > i:
+                if body_started and not body_done and not in_title:
+                    if want_text or builders:
+                        chunk = s[i:lt]
+                        if "&" in chunk:
+                            chunk = decode_entities(chunk)
+                        for b in builders:
+                            b.text.append(chunk)
+                        if collect_blocks:
+                            blk_parts.append(chunk)
+                            if a_depth > 0:
+                                blk_anchor_parts.append(chunk)
+                        write(chunk)
+                else:
+                    text_event(s[i:lt])
+            end_name, name, _, _, close = m.groups()
+            if name is None:  # an end tag, or no tag at all
+                name = end_name
+                end = -1 if name is None else s.find(">", m.end())
+                if end == -1:
+                    i, chunk = _markup(s, lt)
+                    if chunk is not None:
+                        text_event(chunk)
                     continue
-                chunk = decode_entities(ev[1])
-                if in_title:
-                    title_parts.append(chunk)
+                i = end + 1
+                info = tag_info(name)
+                if info is None:
+                    name = name.lower()
+                    f = flags(name, 0)
+                else:
+                    name, f = info
+                if f & _SPECIAL or not stack or stack[-1] != name:
+                    close_element(name)
                     continue
-                if body_done:
-                    continue
-                if not body_started:
-                    if in_head or not chunk.strip():
-                        continue
-                    body_started = True
-                emit_chars(chunk)
-            elif kind == "start":
-                name, attrs, self_closing = ev[1], ev[2], ev[3]
+                stack.pop()  # well-nested: end_effects(name), inlined
+                if f & _A and a_depth:
+                    a_depth -= 1
+                if body_started and not body_done:
+                    if f & _BLOCK and collect_blocks:
+                        if blk_parts:
+                            flush_block(name)
+                        else:
+                            blk_tag = name
+                    if f & _SEP:
+                        writer.end_element(name)
+                    if f & _ENDLINE:
+                        emit("\n")
+                    if f & _LINK and extract_links and builders:
+                        links.append(builders.pop().build(base_uri))
+                continue
+
+            info = tag_info(name)
+            if info is None:
+                name = name.lower()
+                f = flags(name, 0)
+            else:
+                name, f = info
+            i = m.end()
+            self_closing = close == "/>"
+            attrs = _attrs(s, m.end(2), i) if f & attr_flags else None
+            if f & _SPECIAL:
                 if name == "html":
                     continue
                 if name == "head":
@@ -715,55 +695,79 @@ def parse_html(
                     body_started = True
                     in_head = False
                     continue
-                if name == "title" and not body_started:
+                if not body_started:  # title
                     in_title = True
                     continue
-                if name in DISCARD_ELEMENTS:
-                    continue  # tokenizer already consumed script/style bodies
-                if meta_tags and name == "meta":
-                    mname = attrs.get("name")
-                    if mname and "content" in attrs and mname not in meta:
-                        meta[mname] = attrs["content"]
-                if not body_started and not in_head and name not in _HEAD_SCOPE:
-                    body_started = True
-                is_void = name in VOID_ELEMENTS or self_closing
-                # HTML5 rule subset: a new block element auto-closes an open <p>
-                if stack and stack[-1] == "p" and name in _P_CLOSERS:
-                    stack.pop()
-                    end_effects("p")
-                if not is_void:
-                    stack.append(name)
-                    if len(stack) > max_depth:
-                        raise DepthLimitError(
-                            f"element nesting exceeded {max_depth}")
-                if body_started and not body_done:
-                    if collect_blocks and name in BLOCK_ELEMENTS:
+            if f & _DISCARD:  # script/style: contents consumed raw
+                if not self_closing:
+                    cm = _RAW_CLOSE[name].search(s, i)
+                    i = cm.end() if cm else n
+                continue
+            if meta_tags and f & _META:
+                mname = attrs.get("name")
+                if mname and "content" in attrs and mname not in meta:
+                    meta[mname] = attrs["content"]
+            if not body_started and not in_head and not f & _HEAD:
+                body_started = True
+            is_void = f & _VOID or self_closing
+            # HTML5 rule subset: a new block element auto-closes an open <p>
+            if f & _P_CLOSE and stack and stack[-1] == "p":
+                stack.pop()
+                end_effects("p")
+            if not is_void:
+                stack.append(name)
+                if len(stack) > max_depth:
+                    raise DepthLimitError(
+                        f"element nesting exceeded {max_depth}")
+            if body_started and not body_done:
+                if f & _BLOCK and collect_blocks:
+                    if blk_parts:
                         flush_block(name)
-                    if name in SAFE_ELEMENTS:
-                        writer.start_element(name)
-                    if name == "a":
-                        a_depth += 1
-                    if extract_links and name in LINK_ELEMENTS:
-                        handle_link_start(name, attrs)
-                    if is_void:
-                        end_effects(name)
-                elif in_head and extract_links and name == "link":
-                    # <link> lives in head; collect it even though it is not body text
-                    if handle_link_start(name, attrs):
-                        handle_link_end(name)
-            elif kind == "end":
-                name = ev[1]
-                close_element(name)
+                    else:
+                        blk_tag = name
+                if f & _SEP:
+                    writer.start_element(name)
+                if f & _A:
+                    a_depth += 1
+                    if extract_links:
+                        get = attrs.get
+                        b = _LinkBuilder("a", get("href"), get("title"), get("rel"))
+                        b.set_param("id", get("id"))
+                        builders.append(b)
+                elif f & _LINK and extract_links:
+                    b = _link_builder(name, attrs)
+                    alt = attrs.get("alt")
+                    if name == "area":
+                        # quirk preserved: alt chars are emitted BEFORE the
+                        # push in the reference (:160-171), so only
+                        # ENCLOSING links receive them
+                        if alt is not None:
+                            for bb in builders:
+                                bb.text.append(alt)
+                        builders.append(b)
+                    elif b is not None:
+                        builders.append(b)
+                        # img/input: pushed BEFORE the alt chars, so the
+                        # element's own anchor gets them too
+                        if alt is not None and name in ("img", "input"):
+                            for bb in builders:
+                                bb.text.append(alt)
+                if is_void:
+                    end_effects(name)
+            elif in_head and f & _LINK and extract_links and name == "link":
+                # <link> lives in head; collect it even though it is not body text
+                b = _link_builder(name, attrs)
+                links.append(b.build(base_uri))
         # EOF: synthesize end events for everything still open (the
         # reference's TagSoup front-end auto-balances the tree, so its
         # endElement events always fire)
         close_all_open()
-        while builder_stack:
-            handle_link_end("")
+        while builders:
+            links.append(builders.pop().build(base_uri))
     except WriteLimitReached:
         limit_hit = True
 
-    if not limit_hit and collect_blocks:
+    if not limit_hit and collect_blocks and blk_parts:
         flush_block("eof")
 
     title = _WS_COLLAPSE.sub(" ", "".join(title_parts)).strip() or None

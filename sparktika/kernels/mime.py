@@ -167,7 +167,14 @@ def _sniff_riff(data: bytes) -> str | None:
 
 
 def _sniff_mp4(data: bytes) -> str | None:
-    if len(data) >= 12 and data[4:8] == b"ftyp":
+    # an ISO-BMFF file opens with its ftyp box, whose big-endian size
+    # covers at least the header, major brand and minor version (16 bytes)
+    # and fits the payload, or is 0 ("to the end of the file"). Without
+    # the size check, text whose 5th-8th characters spell "ftyp" would be
+    # routed to media.
+    size = int.from_bytes(data[:4], "big")
+    if (len(data) >= 12 and data[4:8] == b"ftyp"
+            and (size == 0 or 16 <= size <= len(data))):
         brand = data[8:12]
         if brand[:3] in (b"M4A",):
             return "audio/mp4"

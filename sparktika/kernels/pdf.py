@@ -56,8 +56,38 @@ from dataclasses import dataclass, field
 
 from .errors import DeadlineError, InflateRatioError, KernelError, check_deadline
 
-_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.DOTALL)
-_STREAM_RE = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
+# Object and stream bodies: a regex matches only the opening marker and
+# bytes.find the closing one. That is the leftmost match the lazy-dot
+# patterns `(\d+)\s+(\d+)\s+obj\b(.*?)endobj` and
+# `stream\r?\n(.*?)endstream` (DOTALL) give, and the same stop when no
+# closing marker follows, without stepping the dot byte by byte (a 3.2 KB
+# body: 72 us against 3 us).
+_OBJ_HEAD_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+_STREAM_HEAD_RE = re.compile(rb"stream\r?\n")
+
+
+def _objects(data: bytes):
+    """(number, generation, body) bytes of every `N G obj ... endobj`, in
+    order."""
+    pos = 0
+    while (m := _OBJ_HEAD_RE.search(data, pos)) is not None:
+        end = data.find(b"endobj", m.end())
+        if end == -1:
+            return
+        yield m.group(1), m.group(2), data[m.end():end]
+        pos = end + 6
+
+
+def _stream(body: bytes) -> tuple[int, bytes] | None:
+    """(offset of `stream`, payload up to `endstream`) of an object body,
+    or None when it holds no complete stream."""
+    m = _STREAM_HEAD_RE.search(body)
+    if m is None:
+        return None
+    end = body.find(b"endstream", m.end())
+    if end == -1:
+        return None
+    return m.start(), body[m.end():end]
 _INFO_KEY_RE = re.compile(rb"/(Title|Author|Creator|Producer|Subject)\s*\(")
 _STARTXREF_RE = re.compile(rb"startxref\s+(\d+)")
 _TRAILER_RE = re.compile(rb"trailer\s*<<")
@@ -402,11 +432,11 @@ class _PdfDoc:
         except Exception:
             pass
         # 2) full scan (robust fallback + catches objects xref missed)
-        for m in _OBJ_RE.finditer(self.data):
-            num = int(m.group(1))
+        for num, gen, body in _objects(self.data):
+            num = int(num)
             if num not in self.bodies:
-                self.bodies[num] = m.group(3)
-                self.gens[num] = int(m.group(2))
+                self.bodies[num] = body
+                self.gens[num] = int(gen)
         # 3) classic trailers
         for m in _TRAILER_RE.finditer(self.data):
             t, _ = _parse_value(self.data, m.end() - 2)
@@ -432,7 +462,7 @@ class _PdfDoc:
         seen: set[int] = set()
         while offset and offset not in seen and 0 <= offset < len(self.data):
             seen.add(offset)
-            om = re.compile(rb"(\d+)\s+(\d+)\s+obj\b").match(
+            om = _OBJ_HEAD_RE.match(
                 self.data, _skip_ws(self.data, offset))
             if not om:
                 return  # classic xref table: scan fallback covers it
@@ -442,10 +472,10 @@ class _PdfDoc:
             if not (isinstance(head, dict) and head.get("Type") == "XRef"):
                 return
             self.trailers.append(head)
-            sm = _STREAM_RE.search(body)
+            sm = _stream(body)
             if not sm:
                 return
-            raw = sm.group(1)
+            raw = sm[1]
             if head.get("Filter") == "FlateDecode":
                 raw = _inflate(raw, self.max_ratio, self.max_bytes)
             dp = head.get("DecodeParms") or {}
@@ -511,7 +541,7 @@ class _PdfDoc:
                 typ = field_at(row, 0)
                 if typ == 1 and num not in self.bodies:
                     off = field_at(row, 1)
-                    om = re.compile(rb"(\d+)\s+(\d+)\s+obj\b").match(
+                    om = _OBJ_HEAD_RE.match(
                         self.data, _skip_ws(self.data, off))
                     if om and int(om.group(1)) == num:
                         end = self.data.find(b"endobj", om.end())
@@ -546,8 +576,8 @@ class _PdfDoc:
         v = None
         if num in self.bodies:
             body = self.bodies[num]
-            sm = _STREAM_RE.search(body)
-            v, _ = _parse_value(body[: sm.start()] if sm else body, 0)
+            sm = _stream(body)
+            v, _ = _parse_value(body[: sm[0]] if sm else body, 0)
             if self._decrypt_allowed(num):
                 # string values of top-level objects are individually
                 # encrypted (§7.6.2) — e.g. /Info metadata strings
@@ -564,10 +594,10 @@ class _PdfDoc:
         out: bytes | None = None
         body = self.bodies.get(num)
         if body is not None:
-            sm = _STREAM_RE.search(body)
+            sm = _stream(body)
             if sm is not None:
                 head = self.obj_dict(num)
-                raw = sm.group(1)
+                raw = sm[1]
                 raw = self._decrypt_stream_bytes(num, head, raw)
                 filt = head.get("Filter") if isinstance(head, dict) else None
                 if filt == "FlateDecode" or (isinstance(filt, list) and "FlateDecode" in filt):
@@ -593,7 +623,7 @@ class _PdfDoc:
             return raw
         if typ == "Metadata" and not self.crypt.encrypt_metadata:
             return raw
-        # the regex capture runs to "endstream" and so includes the
+        # the stream payload runs to "endstream" and so includes the
         # writer's EOL; ciphertext needs exact bounds (AES block
         # alignment) — trust /Length, falling back to an EOL trim
         ln = self.resolve(head.get("Length")) if isinstance(head, dict) else None
@@ -610,10 +640,10 @@ class _PdfDoc:
         body = self.bodies.get(num)
         if body is None:
             return None
-        sm = _STREAM_RE.search(body)
+        sm = _stream(body)
         if sm is None:
             return None
-        return self._decrypt_stream_bytes(num, self.obj_dict(num), sm.group(1))
+        return self._decrypt_stream_bytes(num, self.obj_dict(num), sm[1])
 
     def resolve(self, v, depth: int = 0):
         while isinstance(v, Ref) and depth < 32:

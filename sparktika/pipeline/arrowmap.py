@@ -48,63 +48,20 @@ result reads as null through pandas but stays NaN in the row UDF.
 so a Spark upgrade that moves it fails when the pipeline is imported,
 not in the middle of a job.
 
-Warm reused workers (`_reread_zips_only_when_changed`): the reference
-keeps forked JVMs warm between documents; a reused Spark Python worker
-was not warm. Before every task PySpark's worker calls
-`importlib.invalidate_caches()` (pyspark/worker_util.py), and below
-Python 3.13 `zipimporter.invalidate_caches` re-reads its archive's whole
-directory, once per importer. A reused extraction worker holds 16 of
-them (12 on pyspark.zip, 2 on the spark-core jar, 2 on py4j) over
-26,672 entries: 120-145 ms of re-parsing per task before the first row
-reached the kernel. The batch function patches `zipimporter` once per
-worker so an archive is re-read only when its (st_mtime_ns, st_size)
-changed (0.1 ms for the 16). Measured at local[4] on a 4-vCPU host, ten
-alternating pairs per workload: `html_extract` 2,114 -> 2,706 docs/s
-and 1.58 -> 1.25 CPU s/kdoc; `mixed_formats` 7,207 -> 8,649 docs/s and
-0.48 -> 0.40 CPU s/kdoc; a one-row mapInArrow job at local[1]
-0.23-0.35 -> 0.11-0.15 s. Delete the helper once the workers run
-Python >= 3.13, whose zipimporter reads its directory lazily (the
-helper is a no-op there already).
+The batch function re-checks the warm-worker zipimport patch
+(`sparktika/zipreread.py`) each task; the patch is installed when the
+worker first imports `sparktika`.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-import zipimport
 from collections.abc import Callable, Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-
-def _reread_zips_only_when_changed() -> None:
-    """Make `importlib.invalidate_caches()` re-read a zip archive only when
-    its (st_mtime_ns, st_size) changed since that importer last read it.
-
-    Patches `zipimport.zipimporter` once per process; a changed, new or
-    vanished archive still gets CPython's re-read (and, if it vanished,
-    CPython's emptied directory). A no-op on Python >= 3.13, whose
-    zipimporter already re-reads lazily."""
-    current = zipimport.zipimporter.invalidate_caches
-    if sys.version_info >= (3, 13) or hasattr(current, "reread"):
-        return
-
-    def invalidate_caches(self):
-        # stat BEFORE reading: a change racing the read leaves the older
-        # stamp behind, so the next call reads again instead of missing it
-        try:
-            st = os.stat(self.archive)
-            stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stamp = None
-        if stamp is None or stamp != getattr(self, "_read_stamp", None):
-            current(self)
-            self._read_stamp = stamp
-
-    invalidate_caches.reread = current
-    zipimport.zipimporter.invalidate_caches = invalidate_caches
+from ..zipreread import reread_zips_only_when_changed
 
 
 _INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
@@ -135,7 +92,7 @@ def row_batches(fn: Callable[[dict], Iterable[dict]], schema: T.StructType):
     arrow_schema = to_arrow_schema(schema)
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _reread_zips_only_when_changed()
+        reread_zips_only_when_changed()
         for batch in it:
             yield pa.RecordBatch.from_pylist(
                 [out for row in batch.to_pylist() for out in fn(row)],

@@ -81,7 +81,11 @@ def extract_pages(
     """pages DataFrame -> pages_extracted DataFrame.
 
     Column-prunes to (url, html[, content_type]) before the kernel so the
-    scan never reads `text`/`lang` (check ReadSchema in .explain).
+    scan never reads `text`/`lang` (check ReadSchema in .explain). The
+    projection, size cap included, is one `selectExpr`: building the plan
+    as `select` then `withColumns` with `F.when`/`F.expr` took 54/68 ms
+    (min/median of 12) on the driver, one `selectExpr` 34/38 ms (4-vCPU
+    host, local[2]).
 
     Oversize short-circuit is built in, single-scan: a JVM-side conditional
     projection ships the full payload for rows within the size cap but only
@@ -90,14 +94,16 @@ def extract_pages(
     Arrow, and the kernel emits the same skipped_oversize status row it
     would for a full payload (ref semantics: skipped before parse, O19).
     """
-    cols = ["url", "html"] + (["content_type"] if "content_type" in df.columns else [])
-    slim = df.select(*cols)
+    cols = ["url"] + (["content_type"] if "content_type" in df.columns else [])
     if cfg.max_bytes > 0:
-        slim = slim.withColumns({
-            "__n_bytes_full": F.length("html").cast("long"),
-            "html": F.when(F.length("html") <= cfg.max_bytes, F.col("html"))
-                     .otherwise(F.expr("substring(html, 1, 1024)")),
-        })
+        cols += [
+            "CAST(length(html) AS BIGINT) AS __n_bytes_full",
+            f"IF(length(html) <= {int(cfg.max_bytes)}, html,"
+            " substring(html, 1, 1024)) AS html",
+        ]
+    else:
+        cols.append("html")
+    slim = df.selectExpr(*cols)
     if num_partitions:
         # salt by unique url: defuses host-level byte skew (SURVEY.md §4.2)
         slim = slim.repartition(num_partitions, F.xxhash64("url"))

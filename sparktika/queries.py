@@ -332,7 +332,10 @@ def _office_pages(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
         buf = io.BytesIO()
         with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
             for name, payload in entries.items():
-                zf.writestr(zipfile.ZipInfo(name, (1980, 1, 1, 0, 0, 0)), payload)
+                # a ZipInfo carries its own compress_type (stored); pass
+                # the method so the kernels' inflate path is exercised
+                zf.writestr(zipfile.ZipInfo(name, (1980, 1, 1, 0, 0, 0)),
+                            payload, zipfile.ZIP_DEFLATED)
         return buf.getvalue()
 
     def build(doc_id: int, text: str) -> bytes:

@@ -130,6 +130,22 @@ def test_mime_detected_overrides_declared():
     assert mime.detect_mime(b"%PDF-1.4", declared="text/html") == "application/pdf"
 
 
+def test_mime_ftyp_needs_a_sane_box_size():
+    """Text whose 5th-8th characters spell "ftyp" stays text; an ISO-BMFF
+    ftyp box (big-endian size >= 16 that fits the payload) is media."""
+    from sparktika.synth import build_mp4
+
+    text = b"ezoyftyp ecd qwerty uiop asdf ghjkl zxcv bnm\n"
+    assert mime.detect_mime(text) == "text/plain"
+    r = extract_document("https://x/m/text/a", None, text)
+    assert (r.status, r.content_type_detected) == ("ok", "text/plain")
+    assert mime.detect_mime(build_mp4(3)) == "video/mp4"
+    box = (24).to_bytes(4, "big") + b"ftypM4A " + b"\0" * 12
+    assert mime.detect_mime(box) == "audio/mp4"
+    assert mime.detect_mime(box[:20]) != "audio/mp4"  # box overruns the payload
+    assert mime.detect_mime(b"\0\0\0\x08ftypisom" + b"\0" * 8) != "video/mp4"
+
+
 def test_mime_declared_used_when_no_magic():
     assert mime.detect_mime(b"just some words", declared="text/csv") == "text/csv"
     assert mime.detect_mime(b"just some words") == "text/plain"

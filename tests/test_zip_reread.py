@@ -1,10 +1,11 @@
-"""The map stages' zip-directory patch
-(`sparktika.pipeline.arrowmap._reread_zips_only_when_changed`).
+"""The warm-worker zip-directory patch
+(`sparktika.zipreread.reread_zips_only_when_changed`).
 
 PySpark's worker calls `importlib.invalidate_caches()` before every task;
 below Python 3.13 that re-reads the whole directory of every zip archive
 an importer sits on. The patch keeps CPython's behaviour for a changed,
-new or vanished archive and skips the re-read of an unchanged one."""
+new or vanished archive and skips the re-read of an unchanged one.
+Importing sparktika installs it; the map stages re-check it per task."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ import zipimport
 import pyarrow as pa
 import pytest
 
-from sparktika.pipeline import arrowmap as am
+from sparktika import zipreread as zr
 
 below_313 = pytest.mark.skipif(
     sys.version_info >= (3, 13),
@@ -33,9 +34,11 @@ def _write_zip(path, modules: dict[str, str]) -> None:
 @pytest.fixture
 def zip_on_path(tmp_path, monkeypatch):
     """A temp zip holding one module, first on sys.path, already imported.
-    Restores zipimporter.invalidate_caches and drops the test modules."""
+    Runs with CPython's zipimporter.invalidate_caches (importing sparktika
+    replaced it), restores the method and drops the test modules."""
+    method = zipimport.zipimporter.invalidate_caches
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
-                        zipimport.zipimporter.invalidate_caches)
+                        getattr(method, "reread", method))
     archive = str(tmp_path / "mods.zip")
     _write_zip(archive, {"zr_mod_a": "VALUE = 'a'\n"})
     monkeypatch.syspath_prepend(archive)
@@ -66,7 +69,7 @@ def test_unchanged_archive_is_not_reread(zip_on_path, reads):
     importlib.invalidate_caches()
     assert reads.count(zip_on_path) == 1  # CPython: one re-read per call
 
-    am._reread_zips_only_when_changed()
+    zr.reread_zips_only_when_changed()
     importlib.invalidate_caches()  # first call records the stamp
     before = reads.count(zip_on_path)
     for _ in range(3):
@@ -76,7 +79,7 @@ def test_unchanged_archive_is_not_reread(zip_on_path, reads):
 
 @below_313
 def test_rewritten_archive_is_reread(zip_on_path, reads):
-    am._reread_zips_only_when_changed()
+    zr.reread_zips_only_when_changed()
     importlib.invalidate_caches()
     with pytest.raises(ImportError):
         importlib.import_module("zr_mod_b")
@@ -91,7 +94,7 @@ def test_rewritten_archive_is_reread(zip_on_path, reads):
 
 @below_313
 def test_vanished_archive_empties_the_importer(zip_on_path):
-    am._reread_zips_only_when_changed()
+    zr.reread_zips_only_when_changed()
     importlib.invalidate_caches()
     importer = sys.path_importer_cache[zip_on_path]
     assert importer._files
@@ -103,9 +106,9 @@ def test_vanished_archive_empties_the_importer(zip_on_path):
 
 
 def test_patch_is_idempotent(zip_on_path):
-    am._reread_zips_only_when_changed()
+    zr.reread_zips_only_when_changed()
     once = zipimport.zipimporter.invalidate_caches
-    am._reread_zips_only_when_changed()
+    zr.reread_zips_only_when_changed()
     assert zipimport.zipimporter.invalidate_caches is once
 
 
@@ -113,8 +116,30 @@ def test_patch_is_a_noop_from_python_313(zip_on_path, monkeypatch):
     original = zipimport.zipimporter.invalidate_caches
     with monkeypatch.context() as m:
         m.setattr(sys, "version_info", (3, 13, 0, "final", 0))
-        am._reread_zips_only_when_changed()
+        zr.reread_zips_only_when_changed()
     assert zipimport.zipimporter.invalidate_caches is original
+
+
+def _probe(spark, restore=False):
+    """(pid, replaced) of the one reused Python worker of a local[1]
+    session; with `restore`, put CPython's method back after looking."""
+
+    def probe(batches):
+        import os
+        import zipimport
+
+        for _ in batches:
+            pass
+        method = zipimport.zipimporter.invalidate_caches
+        yield pa.RecordBatch.from_pylist([{
+            "pid": os.getpid(),
+            "replaced": hasattr(method, "reread"),
+        }])
+        if restore and hasattr(method, "reread"):
+            zipimport.zipimporter.invalidate_caches = method.reread
+
+    return spark.range(1, numPartitions=1).mapInArrow(
+        probe, "pid long, replaced boolean").collect()[0]
 
 
 @below_313
@@ -140,31 +165,12 @@ def test_extraction_worker_runs_the_patched_invalidate_caches():
         media = spark.createDataFrame([(7, build_png(7))],
                                       "media_id long, payload binary")
 
-        def probe(batches, restore=False):
-            import os
-            import zipimport
-
-            for _ in batches:
-                pass
-            method = zipimport.zipimporter.invalidate_caches
-            yield pa.RecordBatch.from_pylist([{
-                "pid": os.getpid(),
-                "replaced": hasattr(method, "reread"),
-            }])
-            if restore and hasattr(method, "reread"):
-                zipimport.zipimporter.invalidate_caches = method.reread
-
-        def run_probe(restore=False):
-            return spark.range(1, numPartitions=1).mapInArrow(
-                lambda it: probe(it, restore),
-                "pid long, replaced boolean").collect()[0]
-
-        before = run_probe()
+        before = _probe(spark)
         statuses = [r.status for r in extract_pages(pages).collect()]
-        after = run_probe(restore=True)
-        restored = run_probe()
+        after = _probe(spark, restore=True)
+        restored = _probe(spark)
         media_statuses = [r.status for r in image_stats(media).collect()]
-        after_media = run_probe()
+        after_media = _probe(spark)
     finally:
         spark.stop()
 
@@ -175,3 +181,31 @@ def test_extraction_worker_runs_the_patched_invalidate_caches():
     assert after.replaced
     assert not restored.replaced
     assert after_media.replaced
+
+
+@below_313
+def test_scalar_udf_worker_is_patched():
+    """A worker that runs only a scalar UDF (`dedup.simhash_keys`, an Arrow
+    row UDF; no mapInArrow stage) is patched too: running the UDF imports
+    sparktika, whose import installs the patch. Same reused local[1]
+    worker before and after."""
+    from sparktika.kernels.textstats import simhash64
+    from sparktika.pipeline.dedup import simhash_keys
+    from sparktika.pipeline.session import build_session
+
+    spark = build_session(master="local[1]", shuffle_partitions=1)
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        docs = spark.createDataFrame([(1, "one two three")],
+                                     "doc_id long, text string")
+        before = _probe(spark)
+        keys = simhash_keys(docs).collect()
+        after = _probe(spark)
+    finally:
+        spark.stop()
+
+    assert [(r.key, r.simhash) for r in keys] == [
+        (1, simhash64("one two three") - (1 << 63))]
+    assert not before.replaced
+    assert before.pid == after.pid
+    assert after.replaced
