@@ -281,13 +281,10 @@ def extract_cab(
 ):
     """CAB member text extraction with the zip/tar/7z containers' routing
     and budget semantics (returns a ContainerResult)."""
-    from .container import (MAX_PACKAGE_ENTRY_DEPTH, ContainerResult,
-                            route_member_text)
+    from .container import MemberText
 
-    if depth > MAX_PACKAGE_ENTRY_DEPTH:
-        raise KernelError(
-            f"container nesting exceeded {MAX_PACKAGE_ENTRY_DEPTH} "
-            "(bomb guard)")
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     folders, files, res_data, _ = _parse(data)
 
     # lazy one-folder cache, like the 7z path: members arrive in folder
@@ -320,46 +317,27 @@ def extract_cab(
         cached = (fi, out)
         return out
 
-    parts: list[str] = []
-    entry_names: list[str] = []
     skipped_spanning = 0
-    total = 0
-    truncated = False
     for f in files:
         check_deadline(deadline, "cab member route")
-        entry_names.append(f.name)
+        acc.entries.append(f.name)
         if f.spans:
             skipped_spanning += 1
             continue
-        if truncated:
+        if not acc.wants():
             continue  # names still recorded; no further decompression
         blob = folder_bytes(f.i_folder)
         if blob is None:
             continue
         if f.folder_off + f.size > len(blob):
             continue  # directory lied about this member; others survive
-        body = blob[f.folder_off: f.folder_off + f.size]
-        budget = max_chars - total if max_chars != -1 else -1
-        t = route_member_text(body, f.name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
+        acc.add(f.name, blob[f.folder_off: f.folder_off + f.size])
     md = {"Content-Type": "application/vnd.ms-cab-compressed"}
     if skipped_spanning:
         md["cab-spanning-members-skipped"] = str(skipped_spanning)
     if refused:
         md["cab-folders-refused"] = str(len(refused))
-    return ContainerResult(text=text, entries=entry_names,
-                           truncated=truncated, metadata=md)
+    return acc.result(md)
 
 
 # -- builder (synth corpus + tests; one source of on-disk-layout truth) --

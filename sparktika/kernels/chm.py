@@ -246,12 +246,10 @@ def extract_chm(
 
     sec1 = _Section1(entries, read0, max_ratio, max_entry_bytes, deadline)
 
-    from .container import route_member_text
+    from .container import MemberText
 
-    parts: list[str] = []
-    names: list[str] = []
-    total = 0
-    truncated = False
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     compressed = 0
     refused = 0
     for name, sec, off, ln in entries:
@@ -260,10 +258,10 @@ def extract_chm(
             continue  # storages (::DataSpace/...) and system streams
         if name.endswith("/"):
             continue
-        names.append(name.lstrip("/"))
+        acc.entries.append(name.lstrip("/"))
         if sec == 0:
             if ln > max_entry_bytes:
-                truncated = True
+                acc.lost()
                 continue
             start = content_off + off
             if start + ln > n:
@@ -281,30 +279,13 @@ def extract_chm(
         else:
             refused += 1
             continue
-        budget = max_chars - total if max_chars != -1 else -1
-        if budget == 0:
-            # cap already consumed exactly and another extractable member
-            # remains: its content is lost, so the result IS truncated
-            # (the html member route self-caps, so len(t) > budget alone
-            # cannot observe this boundary)
-            truncated = True
-            continue
-        t = route_member_text(body, name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
+        # asked after the read: the compressed-member count and the
+        # refusal reason cover every member, the ones past the cap too
+        if acc.wants():
+            acc.add(name, body)
     if compressed:
         md["compressed-members"] = [str(compressed)]
     if refused:
         md["compression-refused"] = [sec1.reason or "lzx-unsupported"]
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
-    return ChmResult(text=text, title=title, entries=names,
-                     truncated=truncated, metadata=md)
+    return ChmResult(text=acc.text, title=title, entries=acc.entries,
+                     truncated=acc.truncated, metadata=md)

@@ -1,4 +1,4 @@
-"""Generic zip-container text extraction with the reference's bomb guards.
+"""Archive member text with the reference's bomb guards, and the zip kernel.
 
 Mirrors the reference's container behavior: a zip of parseable documents
 yields their concatenated text, streaming until the output char cap and
@@ -9,21 +9,50 @@ test/TikaProcessTest.java:205-230). Guards:
 - nested-container depth cap (ref zipBombMaxPackageEntryDepth=20)
 - entry count cap
 
-Entry routing reuses the MIME table: text-ish entries are decoded,
-nested zips/OOXML recurse (depth-capped), other types are skipped with
-their names recorded.
+Every archive kernel (zip, tar, ar, cpio and arj here; cab, chm, iso9660,
+lha and 7z in their own modules) walks its own format and hands each
+member to one `MemberText` accumulator, which applies one rule:
+- constructing it raises the nesting guard;
+- every member name is recorded;
+- a member that was cut or skipped for size (`lost`) marks the result
+  truncated, and later members still extract;
+- once the char budget is spent, `wants` says no and marks the result
+  truncated, so a member after the cap is never fetched or decoded;
+- `add` routes a member (`route_member_text`) and cuts its text to the
+  remaining budget.
+
+Member routing reuses the MIME table: text-ish members are decoded, HTML
+is parsed, nested archives recurse (depth-capped), other types carry no
+text and only their names are recorded.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from importlib import import_module
 
 from . import mime as mime_mod
 from .charset import decode as charset_decode
-from .errors import InflateRatioError, KernelError, check_deadline
+from .errors import DeadlineError, InflateRatioError, KernelError, check_deadline
 from .ooxml import extract_docx, extract_pptx, extract_xlsx, is_ooxml, open_zip, read_entry
+from .textout import embedded_block
 
 MAX_PACKAGE_ENTRY_DEPTH = 20
+
+# nested archive MIME -> (kernel module, function, skips a refused member).
+# A refused nested cab or 7z (corrupt header, QUANTUM folder, AES, filter
+# chain: status-row refusals when standalone) is skipped so its siblings
+# keep their text; the bomb guards fired before any decompression, so
+# skipping is safe. A refusal in the other formats fails the outer archive.
+_NESTED = {
+    "application/zip": ("container", "extract_zip_container", False),
+    "application/x-tar": ("container", "extract_tar_container", False),
+    "application/x-archive": ("container", "extract_ar_container", False),
+    "application/x-cpio": ("container", "extract_cpio_container", False),
+    "application/x-arj": ("container", "extract_arj_container", False),
+    "application/vnd.ms-cab-compressed": ("cab", "extract_cab", True),
+    "application/x-7z-compressed": ("sevenzip", "extract_7z", True),
+}
 
 
 def route_member_text(
@@ -36,11 +65,11 @@ def route_member_text(
     deadline: float | None,
     recurse,
 ) -> str | None:
-    """ONE member-routing switch shared by the zip, tar, and 7z
-    containers (r4 review: three hand-rolled copies had already diverged
-    — the zip copy's text/html branch was dead because the broader
-    text/ prefix test preceded it). Returns extracted text, or None when
-    the member type carries none. html BEFORE the text/ prefix test."""
+    """ONE member-routing switch shared by every archive kernel (r4
+    review: three hand-rolled copies had already diverged — the zip
+    copy's text/html branch was dead because the broader text/ prefix
+    test preceded it). Returns extracted text, or None when the member
+    type carries none. html BEFORE the text/ prefix test."""
     detected = mime_mod.detect_mime(body, None, name)
     if detected == "text/html":
         from .htmlparse import parse_html
@@ -49,56 +78,20 @@ def route_member_text(
                           deadline=deadline).text
     if detected.startswith("text/") or detected == "application/xml":
         return charset_decode(body, is_html=False)[0]
-    if detected == "application/zip":
-        return extract_zip_container(body, budget, max_ratio,
-                                     max_entry_bytes, depth + 1, deadline,
-                                     recurse).text
-    if detected == "application/x-tar":
-        return extract_tar_container(body, budget, max_ratio,
-                                     max_entry_bytes, depth + 1, deadline,
-                                     recurse).text
-    if detected == "application/x-archive":
-        return extract_ar_container(body, budget, max_ratio,
-                                    max_entry_bytes, depth + 1, deadline,
-                                    recurse).text
-    if detected == "application/x-cpio":
-        return extract_cpio_container(body, budget, max_ratio,
-                                      max_entry_bytes, depth + 1, deadline,
-                                      recurse).text
-    if detected == "application/x-arj":
-        return extract_arj_container(body, budget, max_ratio,
-                                     max_entry_bytes, depth + 1, deadline,
-                                     recurse).text
-    if detected == "application/vnd.ms-cab-compressed":
-        from .cab import extract_cab
-        from .errors import DeadlineError
-
-        try:
-            return extract_cab(body, budget, max_ratio, max_entry_bytes,
-                               depth + 1, deadline, recurse).text
-        except DeadlineError:
-            raise  # the shared per-document budget always propagates
-        except KernelError:
-            # same posture as the 7z branch: a refused nested cab
-            # (corrupt header, QUANTUM folder) must not drop siblings
+    nested = _NESTED.get(detected)
+    if nested is None:
+        return None
+    module, fn, skips_refused = nested
+    extract = getattr(import_module(f".{module}", __package__), fn)
+    try:
+        return extract(body, budget, max_ratio, max_entry_bytes, depth + 1,
+                       deadline, recurse).text
+    except DeadlineError:
+        raise  # the shared per-document budget always propagates
+    except KernelError:
+        if skips_refused:
             return None
-    if detected == "application/x-7z-compressed":
-        from .errors import DeadlineError
-        from .sevenzip import extract_7z
-
-        try:
-            return extract_7z(body, budget, max_ratio, max_entry_bytes,
-                              depth + 1, deadline, recurse).text
-        except DeadlineError:
-            raise  # the shared per-document budget always propagates
-        except KernelError:
-            # a refused member (corrupt header, AES, filter chain — all
-            # by-design status-row refusals when standalone) must not
-            # fail the OUTER container and lose its siblings' text
-            # (r4 review finding); the bomb guards fired before any
-            # decompression, so skipping is safe
-            return None
-    return None
+        raise
 
 
 @dataclass
@@ -111,6 +104,74 @@ class ContainerResult:
     # a joined string, so an entry name containing '; ' can't inject
     # phantom names (ADVICE r3)
     embedded_names: list[str] = field(default_factory=list)
+
+
+class MemberText:
+    """The member char-budget rule of every archive kernel (module
+    docstring). A kernel records names in `entries`, calls `lost()` for a
+    member it cut or skipped for size, asks `wants()` before it fetches or
+    decodes a body, and hands the body to `add`."""
+
+    __slots__ = ("max_chars", "max_ratio", "max_entry_bytes", "depth",
+                 "deadline", "recurse", "entries", "truncated", "_parts",
+                 "_total")
+
+    def __init__(self, max_chars: int, max_ratio: float,
+                 max_entry_bytes: int, depth: int, deadline: float | None,
+                 recurse) -> None:
+        if depth > MAX_PACKAGE_ENTRY_DEPTH:
+            raise KernelError(f"container nesting exceeded "
+                              f"{MAX_PACKAGE_ENTRY_DEPTH} (bomb guard)")
+        self.max_chars = max_chars
+        self.max_ratio = max_ratio
+        self.max_entry_bytes = max_entry_bytes
+        self.depth = depth
+        self.deadline = deadline
+        self.recurse = recurse
+        self.entries: list[str] = []
+        self.truncated = False
+        self._parts: list[str] = []
+        self._total = 0
+
+    @property
+    def budget(self) -> int:
+        """Chars still allowed, or -1 for no cap."""
+        return -1 if self.max_chars == -1 else self.max_chars - self._total
+
+    def lost(self) -> None:
+        """A member was only partly read or skipped for size."""
+        self.truncated = True
+
+    def wants(self) -> bool:
+        """False, and the result truncated, once the budget is spent: the
+        HTML route and nested archives cap their own output, so a cut in
+        `add` alone cannot see that a later member was dropped."""
+        if self.max_chars != -1 and self._total >= self.max_chars:
+            self.truncated = True
+            return False
+        return True
+
+    def add(self, name: str, body: bytes) -> None:
+        budget = self.budget
+        t = route_member_text(body, name, budget, self.max_ratio,
+                              self.max_entry_bytes, self.depth,
+                              self.deadline, self.recurse)
+        if t is None:
+            return
+        if budget != -1 and len(t) > budget:
+            t = t[:budget]
+            self.truncated = True
+        self._parts.append(t)
+        self._total += len(t)
+
+    @property
+    def text(self) -> str:
+        # every part was cut to the budget left, so this is within the cap
+        return "".join(self._parts)
+
+    def result(self, metadata: dict[str, str]) -> ContainerResult:
+        return ContainerResult(text=self.text, entries=self.entries,
+                               truncated=self.truncated, metadata=metadata)
 
 
 _OOXML_EMBED_PREFIXES = ("word/embeddings/", "xl/embeddings/",
@@ -130,9 +191,8 @@ def extract_zip_container(
     """`recurse(name, payload) -> str | None` is the dispatcher's guarded
     re-entry for OOXML embedded objects (word/xl/ppt embeddings parts,
     typically Ole10Native-wrapped OLE2 files); None disables."""
-    if depth > MAX_PACKAGE_ENTRY_DEPTH:
-        raise KernelError(
-            f"container nesting exceeded {MAX_PACKAGE_ENTRY_DEPTH} (bomb guard)")
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     zf = open_zip(data)
     ooxml_kind = is_ooxml(zf)
     if ooxml_kind:
@@ -167,8 +227,7 @@ def extract_zip_container(
                     t2 = None  # corrupt embed never fails the document
                 if t2:
                     label = ename.rsplit("/", 1)[-1]
-                    full_text += (f"[Embedded: {label}]\n"
-                                  + (t2 if t2.endswith("\n") else t2 + "\n"))
+                    full_text += embedded_block(label, t2)
                     emb_names.append(label)
         else:
             emb_names = []
@@ -178,18 +237,14 @@ def extract_zip_container(
             truncated=max_chars != -1 and len(full_text) > max_chars,
             metadata=md, embedded_names=emb_names)
 
-    parts: list[str] = []
-    total = 0
-    truncated = False
-    names: list[str] = []
     for info in zf.infolist():
         check_deadline(deadline, "zip container entry scan")
         if info.is_dir():
             continue
-        names.append(info.filename)
-        if truncated:
+        acc.entries.append(info.filename)
+        if not acc.wants():
             continue
-        budget = max_chars - total if max_chars != -1 else -1
+        budget = acc.budget
         try:
             # cap the inflate budget at what the output cap still allows:
             # a zip-of-huge-CSV streams only until the cap (ref semantics)
@@ -197,33 +252,16 @@ def extract_zip_container(
                 max_entry_bytes, max(budget * 4, 65536))
             raw = read_entry(zf, info.filename, max_ratio, entry_cap)
         except InflateRatioError:
-            if max_chars != -1:
-                # bounded output requested: stream only a prefix of the huge
-                # entry. Content beyond the prefix is lost, so the result is
-                # truncated even if the text it yields is under the cap.
-                with zf.open(info.filename) as f:
-                    raw = f.read(max(budget * 4, 65536))
-                truncated = True
-            else:
+            if budget == -1:
                 raise
-        t = route_member_text(raw, info.filename, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-        if max_chars != -1 and total >= max_chars:
-            truncated = truncated or total > max_chars
-            total = min(total, max_chars)
-    text = "".join(parts)
-    if max_chars != -1:
-        truncated = truncated or len(text) > max_chars
-        text = text[:max_chars]
-    return ContainerResult(text=text, entries=names, truncated=truncated,
-                           metadata={"Content-Type": "application/zip"})
+            # bounded output requested: stream only a prefix of the huge
+            # entry. Content beyond the prefix is lost, so the result is
+            # truncated even if the text it yields is under the cap.
+            with zf.open(info.filename) as f:
+                raw = f.read(max(budget * 4, 65536))
+            acc.lost()
+        acc.add(info.filename, raw)
+    return acc.result({"Content-Type": "application/zip"})
 
 
 # ------------------------------------------------------------------- tar
@@ -254,15 +292,10 @@ def extract_tar_container(
     """ustar/pax archive text extraction, same routing and budget semantics
     as the zip path. Pure header walk (tar stores entries uncompressed, so
     the only bombs are size fields — bounds-checked — and nesting)."""
-    if depth > MAX_PACKAGE_ENTRY_DEPTH:
-        raise KernelError(
-            f"container nesting exceeded {MAX_PACKAGE_ENTRY_DEPTH} (bomb guard)")
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     if not is_tar(data):
         raise KernelError("not a ustar archive")
-    parts: list[str] = []
-    names: list[str] = []
-    total = 0
-    truncated = False
     pos, n = 0, len(data)
     long_name: str | None = None
     while pos + 512 <= n:
@@ -275,11 +308,7 @@ def extract_tar_container(
         if size < 0 or pos + 512 + size > n + 511:
             raise KernelError("tar entry size out of bounds")
         body = data[pos + 512 : pos + 512 + min(size, max_entry_bytes)]
-        oversize = size > max_entry_bytes and typeflag in (b"0", b"\x00")
-        if oversize:
-            # a member cut at the cap is an HONEST truncation — the zip
-            # path flags the analogous prefix read (r5 review)
-            truncated = True
+        oversize = size > max_entry_bytes
         pos += 512 + ((size + 511) & ~511)
         if typeflag == b"L":  # GNU long name for the NEXT entry
             long_name = body.rstrip(b"\x00").decode("utf-8", "replace")
@@ -293,28 +322,12 @@ def extract_tar_container(
         long_name = None
         if typeflag not in (b"0", b"\x00"):
             continue  # dirs, links, devices carry no text
-        names.append(name)
+        acc.entries.append(name)
         if oversize:
-            continue  # THIS member only — later small members still extract
-        budget = max_chars - total if max_chars != -1 else -1
-        if budget == 0:
-            truncated = True  # char budget spent; remaining content lost
-            continue
-        t = route_member_text(body, name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
-    return ContainerResult(text=text, entries=names, truncated=truncated,
-                           metadata={"Content-Type": "application/x-tar"})
+            acc.lost()  # a member cut at the cap is an honest truncation
+        elif acc.wants():
+            acc.add(name, body)
+    return acc.result({"Content-Type": "application/x-tar"})
 
 
 # --------------------------------------------------------------------------
@@ -342,15 +355,10 @@ def extract_ar_container(
     deadline: float | None = None,
     recurse=None,
 ) -> ContainerResult:
-    if depth > MAX_PACKAGE_ENTRY_DEPTH:
-        raise KernelError(
-            f"container nesting exceeded {MAX_PACKAGE_ENTRY_DEPTH} (bomb guard)")
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     if not is_ar(data):
         raise KernelError("not an ar archive")
-    parts: list[str] = []
-    names: list[str] = []
-    total = 0
-    truncated = False
     longnames = b""
     pos, n = 8, len(data)
     while pos + 60 <= n:
@@ -367,7 +375,7 @@ def extract_ar_container(
         body = data[pos + 60: pos + 60 + min(size, max_entry_bytes)]
         oversize = size > max_entry_bytes
         if oversize:
-            truncated = True
+            acc.lost()
         pos += 60 + size + (size & 1)  # entries are 2-byte aligned
         name = hdr[:16].rstrip().decode("utf-8", "replace")
         if name in ("/", "/SYM64/"):   # symbol tables
@@ -392,28 +400,10 @@ def extract_ar_container(
             name = seg.rstrip(b"/").decode("utf-8", "replace")
         else:
             name = name.rstrip("/")    # GNU terminator on short names
-        names.append(name)
-        if oversize:
-            continue  # THIS member only — later small members still extract
-        budget = max_chars - total if max_chars != -1 else -1
-        if budget == 0:
-            truncated = True
-            continue
-        t = route_member_text(body, name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
-    return ContainerResult(text=text, entries=names, truncated=truncated,
-                           metadata={"Content-Type": "application/x-archive"})
+        acc.entries.append(name)
+        if not oversize and acc.wants():
+            acc.add(name, body)
+    return acc.result({"Content-Type": "application/x-archive"})
 
 
 _CPIO_HEX = b"0123456789abcdefABCDEF"
@@ -436,15 +426,10 @@ def extract_cpio_container(
     deadline: float | None = None,
     recurse=None,
 ) -> ContainerResult:
-    if depth > MAX_PACKAGE_ENTRY_DEPTH:
-        raise KernelError(
-            f"container nesting exceeded {MAX_PACKAGE_ENTRY_DEPTH} (bomb guard)")
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     if not is_cpio(data):
         raise KernelError("not a cpio archive")
-    parts: list[str] = []
-    names: list[str] = []
-    total = 0
-    truncated = False
     pos, n = 0, len(data)
     entries = 0
     while True:
@@ -486,7 +471,7 @@ def extract_cpio_container(
         body = data[data_start: data_start + min(filesize, max_entry_bytes)]
         oversize = filesize > max_entry_bytes
         if oversize:
-            truncated = True
+            acc.lost()
         pos = data_start + filesize
         if magic != b"070707":
             pos = (pos + 3) & ~3
@@ -494,28 +479,10 @@ def extract_cpio_container(
             break
         if (mode & 0o170000) != 0o100000:        # only regular files
             continue
-        names.append(name)
-        if oversize:
-            continue  # THIS member only — later small members still extract
-        budget = max_chars - total if max_chars != -1 else -1
-        if budget == 0:
-            truncated = True
-            continue
-        t = route_member_text(body, name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
-    return ContainerResult(text=text, entries=names, truncated=truncated,
-                           metadata={"Content-Type": "application/x-cpio"})
+        acc.entries.append(name)
+        if not oversize and acc.wants():
+            acc.add(name, body)
+    return acc.result({"Content-Type": "application/x-cpio"})
 
 
 # --------------------------------------------------------------------------
@@ -553,15 +520,10 @@ def extract_arj_container(
     import struct
     import zlib
 
-    if depth > MAX_PACKAGE_ENTRY_DEPTH:
-        raise KernelError(
-            f"container nesting exceeded {MAX_PACKAGE_ENTRY_DEPTH} (bomb guard)")
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     if not is_arj(data):
         raise KernelError("not an ARJ archive")
-    parts: list[str] = []
-    names: list[str] = []
-    total = 0
-    truncated = False
     refused = 0
     pos = 0
     n = len(data)
@@ -612,9 +574,9 @@ def extract_arj_container(
         pos = p + csize
         if ftype not in (0, 1):  # directories / volume labels
             continue
-        names.append(name)
+        acc.entries.append(name)
         if csize > max_entry_bytes:
-            truncated = True
+            acc.lost()
             continue
         if method != 0:
             # compressed entry: commons-compress (the reference's ARJ
@@ -624,22 +586,9 @@ def extract_arj_container(
         if zlib.crc32(body) != fcrc:
             refused += 1  # stored entry fails its CRC: corrupt, refuse
             continue
-        budget = max_chars - total if max_chars != -1 else -1
-        t = route_member_text(body, name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
+        if acc.wants():
+            acc.add(name, body)
     md = {"Content-Type": "application/x-arj"}
     if refused:
         md["compression-refused"] = str(refused)
-    return ContainerResult(text=text, entries=names, truncated=truncated,
-                           metadata=md)
+    return acc.result(md)

@@ -50,6 +50,7 @@ from . import boilerplate, charset, mime, pdf
 from .errors import (DeadlineError, DepthLimitError, EncryptedError,
                      InflateRatioError, KernelError)
 from .htmlparse import Link, parse_html
+from .textout import embedded_block
 
 STATUS_OK = "ok"
 STATUS_TRUNCATED = "truncated"
@@ -89,11 +90,6 @@ def _cap_text(text: str, max_chars: int) -> tuple[str, bool]:
 def _charset_md(detected: str, cs: str) -> dict[str, list[str]]:
     return {"Content-Type": [f"{detected}; charset={cs}"],
             "Content-Encoding": [cs]}
-
-
-def _embedded_block(label: str, text: str) -> str:
-    return f"[Embedded: {label}]\n" + (text if text.endswith("\n")
-                                       else text + "\n")
 
 
 @dataclass(slots=True)
@@ -484,7 +480,7 @@ def _pdf(d: _Doc) -> ExtractResult:
     for fname, payload in r.embedded_files:
         t2 = d.recurse_quietly(fname, payload)
         if t2:
-            pdf_text += _embedded_block(fname, t2)
+            pdf_text += embedded_block(fname, t2)
             emb_names.append(fname)
     # Tika-1.20-parity key set (39 distinct keys on the reference
     # fixture, test/TikaProcessTest.java:129-133); engine fields
@@ -921,19 +917,6 @@ def _codec(d: _Doc) -> ExtractResult:
     return d.rewrap(inner_name, inner, {"Content-Encoding-Outer": [codec]})
 
 
-def _cab(d: _Doc) -> ExtractResult:
-    from .cab import extract_cab
-
-    r = extract_cab(d.data, **d.container_guards)
-    md = {"Content-Type": ["application/vnd.ms-cab-compressed"]}
-    if r.entries:
-        md["container-entries"] = [str(len(r.entries))]
-    for k, v in r.metadata.items():
-        if k != "Content-Type":
-            md[k] = [v]
-    return d.text_row(d.detected, r.text, truncated=r.truncated, metadata=md)
-
-
 def _lha(d: _Doc) -> ExtractResult:
     from .lha import BODY_REFUSAL as _LHA_REFUSAL
     from .lha import extract_lha
@@ -976,9 +959,10 @@ def _chm(d: _Doc) -> ExtractResult:
 
 
 # archive MIME -> (kernel module, function); each returns a
-# ContainerResult whose only extra metadata is compression-refused
+# ContainerResult; every metadata key but Content-Type goes to the row
 _ARCHIVES = {
     "application/x-7z-compressed": ("sevenzip", "extract_7z"),
+    "application/vnd.ms-cab-compressed": ("cab", "extract_cab"),
     "application/x-tar": ("container", "extract_tar_container"),
     "application/x-archive": ("container", "extract_ar_container"),
     "application/x-cpio": ("container", "extract_cpio_container"),
@@ -993,9 +977,7 @@ def _archive(d: _Doc) -> ExtractResult:
     md = {"Content-Type": [d.detected]}
     if r.entries:
         md["container-entries"] = [str(len(r.entries))]
-    refused = r.metadata.get("compression-refused")
-    if refused:
-        md["compression-refused"] = [refused]
+    md.update({k: [v] for k, v in r.metadata.items() if k != "Content-Type"})
     return d.text_row(d.detected, r.text, truncated=r.truncated, metadata=md)
 
 
@@ -1381,7 +1363,7 @@ def _ole2(d: _Doc) -> ExtractResult:
                 except Exception:
                     t2 = None  # corrupt embed never fails the doc
             if t2:
-                doc_text += _embedded_block(label, t2)
+                doc_text += embedded_block(label, t2)
                 emb_names.append(label)
         md = {"Content-Type": ["application/msword"],
               "n-text-pieces": [str(r.n_pieces)],
@@ -1620,7 +1602,6 @@ ROUTES: dict[str, Route] = {
     "application/json": _json,
     "application/zip": _zip,
     **dict.fromkeys(_CODECS, _codec),
-    "application/vnd.ms-cab-compressed": _cab,
     "application/x-lha": _lha,
     "application/x-iso9660-image": _iso,
     "application/vnd.ms-htmlhelp": _chm,

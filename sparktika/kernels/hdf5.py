@@ -36,7 +36,6 @@ from dataclasses import dataclass, field
 from .errors import KernelError, check_deadline
 
 SIGNATURE = b"\x89HDF\r\n\x1a\n"
-HDF5_MIME = "application/x-hdf5"
 
 _MAX_OBJECTS = 4096
 _MAX_DEPTH = 6

@@ -19,7 +19,7 @@ ISO image parser — beyond parity.
 
 from __future__ import annotations
 
-from .container import ContainerResult, route_member_text
+from .container import ContainerResult, MemberText
 from .errors import KernelError, check_deadline
 
 ISO_MIME = "application/x-iso9660-image"
@@ -87,6 +87,8 @@ def extract_iso(
     deadline: float | None = None,
     recurse=None,
 ) -> ContainerResult:
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     if not is_iso9660(data):
         raise KernelError("iso9660: no CD001 descriptor at sector 16")
     pvd = None
@@ -107,38 +109,17 @@ def extract_iso(
     root_size = _both_u32(root, 10)
     entries: list = []
     _iter_dir(data, root_extent, root_size, 0, set(), entries, deadline)
-    parts: list[str] = []
-    names: list[str] = []
-    total = 0
-    truncated = False
     for name, ext, dlen in entries:
-        names.append(name)
+        acc.entries.append(name)
         if ext is None:       # directory
             continue
-        start = ext * _SECTOR
         if dlen > max_entry_bytes:
-            truncated = True
+            acc.lost()
             continue
+        start = ext * _SECTOR
         body = data[start:start + min(dlen, max(0, len(data) - start))]
         if len(body) < dlen:
-            truncated = True   # extent beyond the image: honest prefix
-        budget = max_chars - total if max_chars != -1 else -1
-        if budget == 0:
-            truncated = True
-            continue
-        t = route_member_text(body, name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
-    return ContainerResult(text=text, entries=names, truncated=truncated,
-                           metadata={"Content-Type": ISO_MIME,
-                                     "iso-volume-id": vol_id})
+            acc.lost()   # extent beyond the image: honest prefix
+        if acc.wants():
+            acc.add(name, body)
+    return acc.result({"Content-Type": ISO_MIME, "iso-volume-id": vol_id})

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from .container import route_member_text
+from .container import MemberText
 from .errors import KernelError, check_deadline
 
 
@@ -67,8 +67,8 @@ def extract_lha(
     if not is_lha(data):
         raise KernelError("lha: bad header magic")
     res = LhaResult()
-    parts: list[str] = []
-    total = 0
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     pos, n = 0, len(data)
     while pos < n and data[pos] != 0:
         check_deadline(deadline, "lha member scan")
@@ -111,38 +111,21 @@ def extract_lha(
                     "lha: level-1 extended headers not supported")
         if body_start + skip > n:
             raise KernelError("lha: member body out of bounds")
-        body = data[body_start:body_start + skip]
         pos = body_start + skip
-        if len(res.entries) >= _MAX_ENTRIES:
+        if len(acc.entries) >= _MAX_ENTRIES:
             raise KernelError("lha: entry cap exceeded")
         if method == "-lhd-":
-            res.entries.append(name.rstrip("\\/") + "/")
+            acc.entries.append(name.rstrip("\\/") + "/")
             continue
-        res.entries.append(name)
+        acc.entries.append(name)
         res.methods.append(method)
         if method == "-lh0-":
             res.n_stored += 1
             if skip > max_entry_bytes:
-                res.truncated = True
-                continue
-            budget = max_chars - total if max_chars != -1 else -1
-            if budget == 0:
-                res.truncated = True
-                continue
-            t = route_member_text(body, name, budget, max_ratio,
-                                  max_entry_bytes, depth, deadline,
-                                  recurse)
-            if t is None:
-                continue
-            if budget != -1 and len(t) > budget:
-                t = t[:budget]
-                res.truncated = True
-            parts.append(t)
-            total += len(t)
+                acc.lost()
+            elif acc.wants():
+                acc.add(name, data[body_start:pos])
         else:
             res.n_compressed += 1
-    res.text = "".join(parts)
-    if max_chars != -1 and len(res.text) > max_chars:
-        res.truncated = True
-        res.text = res.text[:max_chars]
+    res.text, res.entries, res.truncated = acc.text, acc.entries, acc.truncated
     return res

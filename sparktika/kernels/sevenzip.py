@@ -474,12 +474,10 @@ def extract_7z(
 ):
     """7z member text extraction with the zip/tar containers' routing and
     budget semantics (returns a ContainerResult)."""
-    from .container import (MAX_PACKAGE_ENTRY_DEPTH, ContainerResult,
-                            route_member_text)
+    from .container import MemberText
 
-    if depth > MAX_PACKAGE_ENTRY_DEPTH:
-        raise KernelError(
-            f"container nesting exceeded {MAX_PACKAGE_ENTRY_DEPTH} (bomb guard)")
+    acc = MemberText(max_chars, max_ratio, max_entry_bytes, depth, deadline,
+                     recurse)
     buf, base = _read_header(data)
     nid = buf.byte()
     if nid == _K_ENCODED_HEADER:
@@ -548,10 +546,6 @@ def extract_7z(
         names = [f"file{i}" for i in range(len(member_slices))]
         has_stream = [True] * len(names)
 
-    parts: list[str] = []
-    entry_names: list[str] = []
-    total = 0
-    truncated = False
     pi = 0
     for i, name in enumerate(names):
         if i < len(has_stream) and not has_stream[i]:
@@ -560,25 +554,8 @@ def extract_7z(
             break
         fi, off_f, size = member_slices[pi]
         pi += 1
-        entry_names.append(name)
+        acc.entries.append(name)
         check_deadline(deadline, "7z member route")
-        if truncated:
-            continue  # names still recorded; no further decompression
-        body = folder_bytes(fi)[off_f: off_f + size]
-        budget = max_chars - total if max_chars != -1 else -1
-        t = route_member_text(body, name, budget, max_ratio,
-                              max_entry_bytes, depth, deadline, recurse)
-        if t is None:
-            continue
-        if budget != -1 and len(t) > budget:
-            t = t[:budget]
-            truncated = True
-        parts.append(t)
-        total += len(t)
-    text = "".join(parts)
-    if max_chars != -1 and len(text) > max_chars:
-        truncated = True
-        text = text[:max_chars]
-    return ContainerResult(
-        text=text, entries=entry_names, truncated=truncated,
-        metadata={"Content-Type": "application/x-7z-compressed"})
+        if acc.wants():  # past the cap no later folder decodes
+            acc.add(name, folder_bytes(fi)[off_f: off_f + size])
+    return acc.result({"Content-Type": "application/x-7z-compressed"})

@@ -59,3 +59,10 @@ class TextWriter:
 
     def getvalue(self) -> str:
         return "".join(self._parts)
+
+
+def embedded_block(label: str, text: str) -> str:
+    """One embedded document's text as `[Embedded: label]` and the text,
+    newline-terminated."""
+    return f"[Embedded: {label}]\n" + (text if text.endswith("\n")
+                                       else text + "\n")

@@ -93,16 +93,15 @@ def extract_pages(
     100-TB plan reads `html` exactly once, oversize payloads never cross
     Arrow, and the kernel emits the same skipped_oversize status row it
     would for a full payload (ref semantics: skipped before parse, O19).
+    The projection applies for any `max_bytes`, 0 included, because the
+    kernel skips every document over it.
     """
     cols = ["url"] + (["content_type"] if "content_type" in df.columns else [])
-    if cfg.max_bytes > 0:
-        cols += [
-            "CAST(length(html) AS BIGINT) AS __n_bytes_full",
-            f"IF(length(html) <= {int(cfg.max_bytes)}, html,"
-            " substring(html, 1, 1024)) AS html",
-        ]
-    else:
-        cols.append("html")
+    cols += [
+        "CAST(length(html) AS BIGINT) AS __n_bytes_full",
+        f"IF(length(html) <= {int(cfg.max_bytes)}, html,"
+        " substring(html, 1, 1024)) AS html",
+    ]
     slim = df.selectExpr(*cols)
     if num_partitions:
         # salt by unique url: defuses host-level byte skew (SURVEY.md §4.2)

@@ -3803,32 +3803,6 @@ def build_wpd(doc_id: int) -> bytes:
             + junk)
 
 
-def _ar_entry(name: str, body: bytes) -> bytes:
-    hdr = (f"{name:<16}" f"{'0':<12}" f"{'0':<6}" f"{'0':<6}"
-           f"{'100644':<8}" f"{len(body):<10}").encode() + b"\x60\x0a"
-    return hdr + body + (b"\n" if len(body) & 1 else b"")
-
-
-def _tar_entry(name: str, body: bytes) -> bytes:
-    import struct as _s
-
-    hdr = bytearray(512)
-    hdr[0:len(name)] = name.encode()
-    hdr[100:108] = b"0000644\x00"
-    hdr[108:116] = b"0000000\x00"
-    hdr[116:124] = b"0000000\x00"
-    hdr[124:136] = f"{len(body):011o}\x00".encode()
-    hdr[136:148] = b"00000000000\x00"
-    hdr[156:157] = b"0"
-    hdr[257:263] = b"ustar\x00"
-    hdr[263:265] = b"00"
-    hdr[148:156] = b"        "
-    chk = sum(hdr)
-    hdr[148:156] = f"{chk:06o}\x00 ".encode()
-    pad = (512 - len(body) % 512) % 512
-    return bytes(hdr) + body + b"\x00" * pad
-
-
 def build_deb(doc_id: int) -> bytes:
     """Debian package (extract_deb_meta oracle): common-format ar with
     debian-binary, a gzip control.tar carrying deb-control(5) fields
@@ -3856,9 +3830,9 @@ def build_deb(doc_id: int) -> bytes:
 
     dtar = _tar_entry("./usr/share/doc/x", b"payload\n") + b"\x00" * 1024
     return (b"!<arch>\n"
-            + _ar_entry("debian-binary", b"2.0\n")
-            + _ar_entry("control.tar.gz", gz(ctar))
-            + _ar_entry("data.tar.gz", gz(dtar)))
+            + _ar_member("debian-binary", b"2.0\n")
+            + _ar_member("control.tar.gz", gz(ctar))
+            + _ar_member("data.tar.gz", gz(dtar)))
 
 
 def build_rpm(doc_id: int) -> bytes:

@@ -39,7 +39,6 @@ def test_oversize_shortcircuit_matches_kernel_path(spark, pages):
     to a 1KB sniff head + true-size column) must produce the same statuses
     and the real document sizes as shipping full payloads to the kernel
     (SURVEY.md O19)."""
-    from sparktika.config import ExtractConfig
     from sparktika.pipeline.extract import make_extract_fn
 
     # reference behavior: full payloads through the kernel (cap applied
@@ -64,6 +63,19 @@ def test_oversize_shortcircuit_matches_kernel_path(spark, pages):
     # and the physical plan reads the source exactly once (no union of scans)
     plan = short_circuit._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Union") == 0
+
+    # max_bytes=0 marks every non-empty document oversize in the kernel, so
+    # the plan still ships only the sniff head plus the true size, and each
+    # row reports the size the full payload gives
+    zero = ExtractConfig(max_bytes=0)
+    zero_plan = extract_pages(pages, zero)
+    plan = zero_plan._jdf.queryExecution().executedPlan().toString()
+    assert "__n_bytes_full" in plan
+    zero_full = (pages.select("url", "html")
+                 .mapInArrow(make_extract_fn(zero), EXTRACTED_SCHEMA))
+    keys = ["url", "status", "n_bytes_in"]
+    assert (sorted(zero_plan.select(*keys).collect())
+            == sorted(zero_full.select(*keys).collect()))
 
 
 def test_resume_pending_shrinks_to_zero(spark, pages):

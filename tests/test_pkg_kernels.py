@@ -50,9 +50,9 @@ def test_deb_bad_version_refuses():
 
 
 def test_deb_missing_control_refuses():
-    from sparktika.synth import _ar_entry
+    from sparktika.synth import _ar_member
 
-    raw = b"!<arch>\n" + _ar_entry("debian-binary", b"2.0\n")
+    raw = b"!<arch>\n" + _ar_member("debian-binary", b"2.0\n")
     with pytest.raises(KernelError, match="missing control.tar"):
         extract_deb(raw)
 
@@ -61,13 +61,13 @@ def test_deb_control_inflation_cap():
     import gzip
     import io
 
-    from sparktika.synth import _ar_entry
+    from sparktika.synth import _ar_member
 
     buf = io.BytesIO()
     with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
         f.write(b"\x00" * (20 * 1024 * 1024))
-    raw = (b"!<arch>\n" + _ar_entry("debian-binary", b"2.0\n")
-           + _ar_entry("control.tar.gz", buf.getvalue()))
+    raw = (b"!<arch>\n" + _ar_member("debian-binary", b"2.0\n")
+           + _ar_member("control.tar.gz", buf.getvalue()))
     with pytest.raises(InflateRatioError):
         extract_deb(raw)
     r = extract_document("u.deb", None, raw)
@@ -150,13 +150,13 @@ def test_deb_truncated_control_tar_refuses():
     import gzip
     import io
 
-    from sparktika.synth import _ar_entry, _tar_entry
+    from sparktika.synth import _ar_member, _tar_entry
 
     ctar = _tar_entry("./control", b"Package: x\n" * 40)[:600]  # cut body
     buf = io.BytesIO()
     with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
         f.write(ctar)
-    raw = (b"!<arch>\n" + _ar_entry("debian-binary", b"2.0\n")
-           + _ar_entry("control.tar.gz", buf.getvalue()))
+    raw = (b"!<arch>\n" + _ar_member("debian-binary", b"2.0\n")
+           + _ar_member("control.tar.gz", buf.getvalue()))
     with pytest.raises(KernelError, match="out of bounds"):
         extract_deb(raw)
